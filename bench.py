@@ -1,295 +1,161 @@
-"""Headline benchmark: run every declared query at $SPARK_GRAFT_SF_DIR.
+"""Query-suite timer: run declared queries at $SPARK_GRAFT_SF_DIR.
 
-Prints the full JSON line
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
-followed by ONE final COMPACT JSON line (same metric/value, no
-per-query map) sized to survive the driver's ~2000-char stdout tail
-capture — so the driver's recorded ``parsed`` is non-null again.
+    python bench.py [QUERY ...]
 
-Each query is forced with the noop sink (full compute, no driver-side
-collect cost). Every query is timed SPARK_GRAFT_BENCH_RUNS times
-(default 3) in interleaved passes and the reported time is the
-per-query MEDIAN: single-shot timings at sub-second scale jitter ±1.8×
-with JVM/GC/host noise (the r03 bench showed symmetric ±1.8× swings on
-untouched code), which a median absorbs while a lone sample cannot.
-Pass 1 still absorbs JVM/codegen warmup — honest for a batch engine —
-but the median discards that pass unless the query is genuinely slow.
+Runs the named queries, or every query in ``QUERIES`` when none are
+named, for SPARK_GRAFT_BENCH_RUNS (default 3) interleaved passes in one
+session. Odd passes run the list in reverse (ABBA), so JVM warm-up and
+drift land on both ends of the order instead of on the same queries.
+Each sample times ``spec.spark(...)`` plus a ``noop`` write (full
+compute, no driver-side collect), then releases the query's persisted
+and checkpointed blocks so suite memory stays flat in query count. A
+query that raises is recorded under ``failed`` with its error and is
+not run again; the loop keeps going. The reported time is the
+per-query MEDIAN over the passes.
 
-Two regression lists ship in the JSON line:
-  * ``regressions_vs_r1``   — vs the round-1 floor (BENCH_r01.json),
-    the driver's long-horizon gate.
-  * ``regressions_vs_prev`` — vs the LATEST ``BENCH_r{N}.json`` in the
-    repo, so a round-over-round slide (r03: heavy_hitter_tokens
-    2.44 s → 6.00 s, invisible to the r1 gate) is flagged the round it
-    happens.
+The run is stamped with the host fingerprint from ``perfbench.host``.
+It is compared against ``BENCH_local.json`` only when that file carries
+the same fingerprint and scale factor; otherwise the output says
+``"comparable": false`` and carries no comparison fields. Numbers from
+another host, core count or heap are never rescaled into this one's.
+
+Prints the full JSON line (per-query map included, also written to
+``BENCH_latest_full.json``), then ONE final COMPACT JSON line without
+the per-query map, sized to survive a ~2000-char stdout tail capture.
+Exits non-zero when a query failed, and, with SPARK_GRAFT_BENCH_STRICT
+set, also on a regression or a latency-budget breach.
 """
 
 from __future__ import annotations
 
-import glob
 import json
+import math
 import os
-import re
 import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from bikes_data_warehouse_etl_spark.session import get_spark  # noqa: E402
-from bikes_data_warehouse_etl_spark.plans import QUERIES  # noqa: E402
-
 REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
+from bikes_data_warehouse_etl_spark.plans import QUERIES  # noqa: E402
+from bikes_data_warehouse_etl_spark.session import (  # noqa: E402
+    get_spark,
+    unpersist_all,
+)
+from perfbench import host  # noqa: E402
 
-# --- host-speed calibration (round-6) ---------------------------------------
-# The r4→r5 committed baselines differed by a UNIFORM 1.21× (host drift,
-# not plan regressions), which poisons cross-round gating. Each bench run
-# therefore times one fixed pure-CPU, data-independent Spark job — a
-# range scan hashed and summed across all cores, zero input, zero
-# shuffle — and records its median as ``calibration_s``. When a baseline
-# json also carries one, the gates scale that baseline's per-query times
-# by (cal_now / cal_base) before comparing, so only drift RELATIVE to
-# the host's measured speed is flagged. The clamp keeps a pathological
-# calibration sample (GC pause in the cal cell itself) from silently
-# widening the gate by more than 2× either way.
-_CAL_ROWS = 1_000_000_000
+BASELINE = os.path.join(REPO, "BENCH_local.json")
+# NOT named BENCH_local.json on purpose: a file overwritten by every run
+# must never become the baseline, or each run would compare to itself.
+FULL_OUT = os.path.join(REPO, "BENCH_latest_full.json")
 
-
-def run_calibration(spark) -> float:
-    from pyspark.sql import functions as F
-
-    # pmod keeps the running sum < 2e8 * 1e6 « 2^63 (ANSI overflow-safe)
-    df = spark.range(0, _CAL_ROWS, 1, 32).select(
-        F.sum(F.pmod(F.xxhash64("id"), F.lit(1000003))).alias("h")
-    )
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
-def _cal_ratio(cal_now: float | None, parsed: dict) -> float:
-    cal_base = parsed.get("calibration_s")
-    if not cal_now or not cal_base:
-        return 1.0
-    return min(2.0, max(0.5, cal_now / cal_base))
-
-
-def regressions_vs(
-    timings: dict[str, float],
-    baseline_path: str,
-    threshold: float = 1.5,
-    sf: float | None = None,
-    cal_now: float | None = None,
-) -> list[str]:
-    """Per-query regression gate vs a prior round's BENCH json.
-
-    A query regresses when it is > ``threshold``× its baseline time AND
-    the absolute delta exceeds 0.5 s (sub-second queries jitter with JVM
-    warmup order; a 0.2 s → 0.4 s flip is noise, 5 s → 9 s is not).
-    New queries (absent from baseline) never count, nor do queries whose
-    definition changed since the baseline round (the old floor measures
-    different work). When ``sf`` is given and the baseline records a
-    DIFFERENT scale factor, the whole comparison is skipped — an sf1
-    run gated against sf0.1 medians would flag the entire suite.
-    Baselines carrying ``calibration_s`` are rescaled to this host's
-    measured speed first (see ``run_calibration``).
-    """
-    shape_changed = {
-        # r2 reshaped this query for the bounded-error oracle: it now
-        # also computes the exact COUNT(DISTINCT) alongside the HLL
-        # estimate, so the r1 floor (estimate only) is obsolete.
-        "approx_distinct_parts",
-    }
-    if not baseline_path or not os.path.exists(baseline_path):
-        return []
-    with open(baseline_path) as f:
-        doc = json.load(f)
-    # driver's BENCH_r{N}.json wraps the bench line under "parsed" —
-    # which can be null when the driver's own capture truncated (r03),
-    # so fall through to {} rather than crash on a None
-    parsed = (doc.get("parsed") or doc)
-    base_sf = parsed.get("sf", doc.get("sf"))
-    if sf is not None and base_sf is not None and float(base_sf) != float(sf):
-        return []
-    base = parsed.get("queries") or {}
-    ratio = _cal_ratio(cal_now, parsed)
-    return sorted(
-        name
-        for name, t in timings.items()
-        if name in base
-        and name not in shape_changed
-        and t > base[name] * ratio * threshold
-        and t - base[name] * ratio > 0.5
-    )
-
-
-# --- absolute per-query latency budget (round-5 gate) ----------------------
-# Both regression gates are RELATIVE: a query born slow never trips them.
-# This budget flags any query whose sf0.1 median exceeds LATENCY_BUDGET_S.
-# The exception list is the documented density-bound family — queries whose
-# cost is the honest price of their algorithm (each carries the analysis in
-# its docstring), with a per-query ceiling so even the exceptions can't
-# silently double. The budget only applies at sf ≈ 0.1 (the driver's scale);
-# at other sfs the absolute numbers mean different work.
+# Absolute per-query latency budget. The comparison is RELATIVE, so a
+# query born slow never trips it; this flags any query whose sf0.1
+# median exceeds the budget. It applies only at sf0.1: at other scale
+# factors the absolute numbers mean different work.
 LATENCY_BUDGET_S = 5.0
-LATENCY_EXCEPTIONS: dict[str, float] = {
-    # (poisson_bootstrap_ci left this list in round 6: replicate
-    # uniforms from ONE md5 via affine families — well under budget.
-    # theil_sen_trend left in round 7: histogram-bisection rewrite,
-    # 6.7 s → 4.4 s.
-    # dup_span_fraction left in round 11: its ~5 s floor was Spark's
-    # InferFiltersFromGenerate duplicating the tokenize+8-gram build
-    # into a single-split pushed filter; with the rule excluded
-    # (session.py) the warm median is ~1.5-2.2 s — comfortably inside
-    # the standard 5 s budget, so the 6.0 s ceiling is deleted.)
-}
 
 
-def budget_cal_base() -> float | None:
-    """Calibration of the HOST the latency ceilings were measured on:
-    the checked-in ``BENCH_local.json`` (the same file whose medians
-    justified each ceiling). The absolute budget is only meaningful in
-    that host's time units — see ``over_latency_budget``."""
-    try:
-        with open(os.path.join(REPO, "BENCH_local.json")) as f:
-            doc = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    return (doc.get("parsed") or doc).get("calibration_s")
+def time_queries(
+    spark, names: list[str], sf_dir: str, n_runs: int
+) -> tuple[dict[str, float], dict[str, str]]:
+    """Per-query median seconds over ``n_runs`` interleaved passes, and
+    ``{name: error}`` for the queries that raised."""
+    samples: dict[str, list[float]] = {name: [] for name in names}
+    failed: dict[str, str] = {}
+    for p in range(n_runs):
+        for name in names if p % 2 == 0 else names[::-1]:
+            if name in failed:
+                continue
+            t0 = time.perf_counter()
+            try:
+                df = QUERIES[name].spark(spark, sf_dir)
+                df.write.format("noop").mode("overwrite").save()
+                samples[name].append(time.perf_counter() - t0)
+            except Exception as e:  # noqa: BLE001 — keep timing the rest
+                lines = str(e).strip().splitlines()
+                failed[name] = (lines[0] if lines else type(e).__name__)[:300]
+                print(f"{name}: FAIL {failed[name]}", file=sys.stderr)
+            finally:
+                unpersist_all(spark)
+    timings = {
+        name: round(statistics.median(ts), 3)
+        for name, ts in samples.items()
+        if name not in failed
+    }
+    return timings, failed
 
 
-def over_latency_budget(
+def compare(
     timings: dict[str, float],
+    baseline_path: str | None,
+    fingerprint: dict,
     sf: float | None,
-    cal_now: float | None = None,
-    cal_base: float | None = None,
-) -> list[str]:
-    """Queries whose median exceeds the absolute budget at sf0.1.
-
-    The ceilings were measured on the ``BENCH_local.json`` host; a raw
-    comparison on a slower host flags queries that are actually flat
-    (judge r9: the driver host measured calibration 1.078 s vs the
-    local 0.922 s and raw-flagged ``dup_span_fraction`` at 6.414 s —
-    calibrated ~5.5 s, inside its 6.0 s ceiling). When both
-    calibrations are known, each ceiling is rescaled by
-    ``cal_now / cal_base`` — the same host-drift normalization the
-    relative regression gates apply to their baselines — clamped to
-    [0.5, 2] so a pathological calibration sample can't stretch the
-    budget arbitrarily. Without either calibration the compare stays
-    raw (the pre-r10 behavior)."""
-    if sf is None or abs(sf - 0.1) > 1e-9:
-        return []
-    scale = 1.0
-    if cal_now and cal_base:
-        scale = min(2.0, max(0.5, cal_now / cal_base))
-    return sorted(
-        name
-        for name, t in timings.items()
-        if t > LATENCY_EXCEPTIONS.get(name, LATENCY_BUDGET_S) * scale
-    )
-
-
-def latest_bench_json() -> str | None:
-    """The newest USABLE per-query baseline.
-
-    Preference order: the checked-in ``BENCH_local.json`` (the previous
-    round's locally-run median-of-3, committed explicitly), then the
-    highest-numbered driver ``BENCH_r{N}.json`` that actually carries
-    per-query timings — rounds whose driver-side capture truncated
-    have ``parsed: null`` (r02 and r03 both do) and are skipped."""
-    candidates = [(10**6, os.path.join(REPO, "BENCH_local.json"))]
-    for p in glob.glob(os.path.join(REPO, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            candidates.append((int(m.group(1)), p))
-    for _, p in sorted(candidates, reverse=True):
-        try:
-            with open(p) as f:
-                doc = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if ((doc.get("parsed") or doc).get("queries")) or {}:
-            return p
-    return None
-
-
-def perf_vs_prev(
-    timings: dict[str, float],
-    cal_now: float | None,
-    sf: float | None = None,
+    threshold: float = 1.5,
 ) -> dict:
-    """Bench-side round-over-round comparison (VERDICT r10 item 2).
+    """This run against one baseline run of the same host and sf.
 
-    The driver's stdout tail capture (~2000 chars) cannot carry the
-    315-entry per-query map, so its own per-query/geomean machinery
-    records nothing (PERF_r10: n_common 0, geomean null). Compute the
-    comparison HERE against the newest usable per-query baseline
-    (``latest_bench_json`` — the committed ``BENCH_local.json``, i.e.
-    the previous round's medians) and ship the aggregate fields in the
-    compact final line: geomean speedup, regressed/improved counts at
-    ±10%, and the top-5 regressed queries with before/after seconds.
-    The baseline is rescaled by the calibration ratio first, same as
-    the regression gates, so host drift does not masquerade as a
-    per-query slide."""
-    import math
-
-    path = latest_bench_json()
-    if not path:
-        return {}
+    A query regresses when it is > ``threshold``× its baseline median
+    AND more than 0.5 s slower (sub-second queries jitter with warm-up
+    order: 0.2 s → 0.4 s is noise, 5 s → 9 s is not). Queries absent
+    from the baseline never count. The aggregate fields are the
+    geomean speedup over the common queries and the counts that moved
+    by more than 10% either way, with the five worst before/after."""
+    if baseline_path is None:
+        return {"comparable": False}
     try:
-        with open(path) as f:
+        with open(baseline_path) as f:
             doc = json.load(f)
     except (OSError, json.JSONDecodeError):
-        return {}
-    parsed = doc.get("parsed") or doc
-    base_sf = parsed.get("sf", doc.get("sf"))
-    if sf is not None and base_sf is not None and float(base_sf) != float(sf):
-        # an sf1 run compared against sf0.1 medians would report the
-        # whole suite regressed — same guard as regressions_vs
-        return {}
-    base = parsed.get("queries") or {}
-    ratio = _cal_ratio(cal_now, parsed)
+        return {"comparable": False}
+    if doc.get("fingerprint") != fingerprint or doc.get("sf") != sf:
+        return {"comparable": False}
+    base = doc.get("queries") or {}
     speedups = {
-        q: (base[q] * ratio) / t
+        q: base[q] / t
         for q, t in timings.items()
         if q in base and t > 0 and base[q] > 0
     }
-    if not speedups:
-        return {"prev_per_query_baseline": os.path.basename(path)}
-    geomean = math.exp(
-        sum(math.log(s) for s in speedups.values()) / len(speedups)
-    )
-    regressed = sorted(
+    slower = sorted(
         (q for q, s in speedups.items() if s < 1 / 1.1),
         key=lambda q: speedups[q],
     )
-    improved = [q for q, s in speedups.items() if s > 1.1]
-    return {
-        "prev_per_query_baseline": os.path.basename(path),
-        "geomean_speedup_vs_prev": round(geomean, 3),
+    out = {
+        "comparable": True,
+        "prev_per_query_baseline": os.path.basename(baseline_path),
+        "regressions_vs_prev": sorted(
+            q
+            for q, t in timings.items()
+            if q in base and t > base[q] * threshold and t - base[q] > 0.5
+        ),
         "n_common_vs_prev": len(speedups),
-        "n_regressed_gt10pct": len(regressed),
-        "n_improved_gt10pct": len(improved),
+        "n_regressed_gt10pct": len(slower),
+        "n_improved_gt10pct": sum(1 for s in speedups.values() if s > 1.1),
         "top_regressed": [
-            {
-                "q": q,
-                "prev": round(base[q] * ratio, 3),
-                "now": timings[q],
-            }
-            for q in regressed[:5]
+            {"q": q, "prev": base[q], "now": timings[q]} for q in slower[:5]
         ],
     }
+    if speedups:
+        out["geomean_speedup_vs_prev"] = round(
+            math.exp(statistics.fmean(math.log(s) for s in speedups.values())),
+            3,
+        )
+    return out
+
+
+def over_latency_budget(timings: dict[str, float], sf: float | None) -> list[str]:
+    """Queries whose median exceeds the absolute budget at sf0.1."""
+    if sf is None or abs(sf - 0.1) > 1e-9:
+        return []
+    return sorted(name for name, t in timings.items() if t > LATENCY_BUDGET_S)
 
 
 def compact_summary(payload: dict) -> dict:
     """The final stdout line's content: every gate field, NO per-query
-    map, so the driver's ~2000-char tail capture ends with one
-    complete parseable JSON object (BENCH_r02..r08 all recorded
-    parsed: null off the single giant line). Regression lists are the
-    one unbounded field; a pathological all-regressed run is truncated
-    by count — the gate booleans a reader needs survive either way."""
+    map, so a ~2000-char tail capture ends with one complete parseable
+    JSON object. Name lists are the unbounded fields; a pathological
+    run truncates them by count."""
     s = {
         k: payload[k]
         for k in (
@@ -298,11 +164,11 @@ def compact_summary(payload: dict) -> dict:
             "unit",
             "sf",
             "runs_per_query",
-            "calibration_s",
-            "regressions_vs_r1",
+            "fingerprint",
+            "comparable",
+            "failed",
             "regressions_vs_prev",
             "latency_budget_s",
-            "latency_cal_base",
             "over_latency_budget",
             "prev_per_query_baseline",
             "geomean_speedup_vs_prev",
@@ -313,101 +179,61 @@ def compact_summary(payload: dict) -> dict:
         )
         if k in payload
     }
-    for k in ("regressions_vs_r1", "regressions_vs_prev",
-              "over_latency_budget"):
+    if "failed" in s:
+        s["failed"] = sorted(s["failed"])
+    for k in ("failed", "regressions_vs_prev", "over_latency_budget"):
         if len(s.get(k, [])) > 20:
             s[k] = s[k][:20] + [f"...+{len(s[k]) - 20} more"]
     s["queries_n"] = len(payload.get("queries", {}))
-    s["per_query_in"] = "BENCH_latest_full.json"
+    s["per_query_in"] = os.path.basename(FULL_OUT)
     return s
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> int:
+    names = list(sys.argv[1:] if argv is None else argv) or list(QUERIES)
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf = float(sf) if sf else None
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     spark = get_spark("bench")
-
-    samples: dict[str, list[float]] = {name: [] for name in QUERIES}
-    cal_samples: list[float] = []
-    for _ in range(n_runs):
-        # calibration first in each pass: same JVM state the queries see
-        cal_samples.append(run_calibration(spark))
-        for name, spec in QUERIES.items():
-            t0 = time.perf_counter()
-            df = spec.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-
-    timings = {
-        name: round(statistics.median(ts), 3) for name, ts in samples.items()
-    }
-    total = sum(timings.values())
-    cal_s = round(statistics.median(cal_samples), 3)
-
-    cur_sf = float(sf) if sf else None
-    r1_baseline = os.environ.get(
-        "SPARK_GRAFT_BENCH_BASELINE", os.path.join(REPO, "BENCH_r01.json")
-    )
-    regressed_r1 = regressions_vs(timings, r1_baseline, sf=cur_sf, cal_now=cal_s)
-    regressed_prev = regressions_vs(
-        timings, latest_bench_json(), sf=cur_sf, cal_now=cal_s
-    )
-    cal_base = budget_cal_base()
-    over_budget = over_latency_budget(
-        timings, cur_sf, cal_now=cal_s, cal_base=cal_base
+    fp = host.fingerprint(
+        spark, {"driver_memory": spark.conf.get("spark.driver.memory")}
     )
 
+    timings, failed = time_queries(spark, names, sf_dir, n_runs)
+    over_budget = over_latency_budget(timings, sf)
     payload = {
         "metric": "synthetic_query_suite_total",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf else None,
+        "sf": sf,
         "runs_per_query": n_runs,
-        "calibration_s": cal_s,
-        "regressions_vs_r1": regressed_r1,
-        "regressions_vs_prev": regressed_prev,
+        "fingerprint": fp,
+        "failed": failed,
         "latency_budget_s": LATENCY_BUDGET_S,
-        "latency_exceptions": LATENCY_EXCEPTIONS,
-        # the ceilings' home-host calibration: over_latency_budget
-        # rescales by cal_s/latency_cal_base before comparing, so a
-        # slow driver host no longer raises false budget flags
-        "latency_cal_base": cal_base,
         "over_latency_budget": over_budget,
+        **compare(timings, BASELINE, fp, sf),
     }
-    payload.update(perf_vs_prev(timings, cal_s, sf=cur_sf))
-    # The driver's stdout capture keeps only the LAST ~2000 chars of the
-    # line; at 300+ queries the per-query map alone exceeds that, so
-    # BENCH_r02..r05 all carry "parsed": null. The printed line stays the
-    # contract (summary fields deliberately LAST in the object so a tail
-    # capture still shows them); the full machine-readable payload is
-    # additionally written to BENCH_latest_full.json for the record.
-    # NOT named BENCH_r*.json / BENCH_local.json on purpose: it must
-    # never be picked up as a regression baseline (a file overwritten by
-    # every run would gate each run against itself).
     try:
-        with open(os.path.join(REPO, "BENCH_latest_full.json"), "w") as f:
+        with open(FULL_OUT, "w") as f:
             json.dump(payload, f, indent=1)
             f.write("\n")
     except OSError:
-        pass  # read-only checkout: the printed line is still the contract
+        pass  # read-only checkout: the printed lines are still the contract
     print(json.dumps(payload))
-    # The driver keeps only the last ~2000 chars of stdout, so the full
-    # line above never parses on its side (BENCH_r02..r08 all record
-    # "parsed": null). Emit ONE final COMPACT line — same metric/value
-    # contract, no per-query map (< 1 KB) — so a tail capture ends with
-    # a complete, parseable JSON object. Local tooling keeps using the
-    # full line / BENCH_latest_full.json; the two lines never disagree
-    # (the compact one is a field-subset of the same payload).
     print(json.dumps(compact_summary(payload)))
-    # strict mode (local/CI use): non-zero exit on any per-query regression
-    # or absolute-budget breach
-    if (regressed_r1 or regressed_prev or over_budget) and os.environ.get(
-        "SPARK_GRAFT_BENCH_STRICT"
-    ):
-        sys.exit(1)
+    if failed:
+        return 1
+    strict = os.environ.get("SPARK_GRAFT_BENCH_STRICT")
+    if strict and (payload.get("regressions_vs_prev") or over_budget):
+        return 1
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -324,8 +324,9 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and returns -1 past the threshold (early exit on the first band
     row that exceeds it). Exact for every emitted distance, so the
     full-DP oracle hash-matches. On these 18-char names the measured
-    effect is a wash (same-JVM ABBA at sf10, tools/ab_sf10.py: 95 s
-    unbounded vs 100 s banded mean — within this host's noise); the
+    effect is a wash (same-JVM ABBA at sf10, PERF.md round 5
+    session 3: 95 s unbounded vs 100 s banded mean — within this
+    host's noise); the
     banded form is kept because its advantage is O(n/k) and grows
     with string length, which is the regime that matters at 100 TB
     (real entity names, not fixed-width synthetics)."""

@@ -282,7 +282,7 @@ def q_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it); the mirror lands on the already support-filtered edge set,
     # which is orders of magnitude smaller. sf10: 143 s (old
     # both-directions build, full-sweep conditions) → 39 s isolated,
-    # 9-13 s warm-cache (tools/ab_sf10.py ABBA), same hash.
+    # 9-13 s warm-cache (same-JVM ABBA, PERF.md round 5 session 3), same hash.
     from bikes_data_warehouse_etl_spark.plans.pipeline_ops16 import (
         co_order_edges,
     )

@@ -55,7 +55,7 @@ def get_spark(
         # this width, then coalesces down to the advisory size). The
         # local default is the CORE COUNT, same as shuffle.partitions,
         # and that is a MEASURED choice, not an omission: an
-        # interleaved same-JVM ABBA at sf10 (tools/ab_sf10.py — the
+        # interleaved same-JVM ABBA at sf10 (PERF.md round 5 session 3 — the
         # only trustworthy protocol on this host, where cross-run
         # times for one query swing 92→224 s) showed 256-wide
         # pre-coalesce LOSING on a single 32-core JVM: the shingle

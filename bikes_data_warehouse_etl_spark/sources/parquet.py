@@ -103,11 +103,6 @@ def load_tables(
     return {t: read_table(spark, sf_dir, t) for t in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a temp view so queries also run as pure SQL."""
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
 def widen_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Round-robin repartition a scan ONLY when it has fewer input
     splits than the cluster has cores.

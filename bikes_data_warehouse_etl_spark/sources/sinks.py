@@ -46,14 +46,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def read_partition_pruned(
-    spark: SparkSession, path: str
-) -> DataFrame:
-    """Plain read; apply partition-column filters on the result and
-    Spark prunes directories before listing files."""
-    return spark.read.parquet(path)
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

@@ -20,17 +20,20 @@ equivalents here share the *same* builder functions as the batch path:
   reference's per-run SCD loads)
 
 All tested with ``trigger(availableNow=True)`` so they run to
-completion on static directories — the same code attaches to a live
+completion on static directories (``run_to_memory`` drains any of the
+stream builders into a memory sink) — the same code attaches to a live
 drop-directory/Kafka source unchanged.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 import pyspark.sql.functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -143,22 +146,6 @@ def windowed_event_counts(
     )
 
 
-def run_windowed_counts_to_memory(
-    spark: SparkSession, events_dir: str, table: str = "windowed_counts"
-) -> None:
-    """Run the windowed aggregation over all currently-available files
-    into an in-memory sink (complete mode), blocking until drained."""
-    q = (
-        windowed_event_counts(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def session_window_counts(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -179,20 +166,6 @@ def session_window_counts(
             "n_events",
         )
     )
-
-
-def run_session_windows_to_memory(
-    spark: SparkSession, events_dir: str, table: str = "session_counts"
-) -> None:
-    q = (
-        session_window_counts(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
@@ -253,8 +226,8 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
     final-state-equal, so the engine can migrate stateful pipelines
     across the API generations with proof of equivalence.
 
-    Requires the RocksDB state store provider (set by
-    :func:`run_user_totals_tws_to_memory`); state is one (n, cents)
+    Requires the RocksDB state store provider (start the query inside
+    :func:`rocksdb_state_store`); state is one (n, cents)
     pair per user — flat in users, independent of stream length.
     """
     import pandas as pd
@@ -303,52 +276,6 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-
-
-def run_user_totals_tws_to_memory(
-    spark: SparkSession, events_dir: str, table: str = "user_totals_tws"
-) -> None:
-    """Drain the transformWithState totals over all available files.
-    RocksDB provider is required by the operator (heap provider
-    rejects it); the previous provider conf is restored afterwards —
-    ``spark.conf.set`` is sticky on the shared session, and leaving
-    RocksDB active would silently move every LATER streaming query in
-    the session onto a different state store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            running_user_totals_tws(stream_events(spark, events_dir))
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prev)
-
-
-def run_user_totals_to_memory(
-    spark: SparkSession, events_dir: str, table: str = "user_totals"
-) -> None:
-    """Drain the stateful per-user totals over all available files into
-    a memory sink (update mode; last row per user = final state)."""
-    q = (
-        running_user_totals(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stream_stream_view_purchase_join(
@@ -409,20 +336,6 @@ def stream_stream_view_purchase_join(
     )
 
 
-def run_stream_stream_join_to_memory(
-    spark: SparkSession, events_dir: str, table: str = "ss_join"
-) -> None:
-    q = (
-        stream_stream_view_purchase_join(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup: each event_id passes once; duplicate
     replays within the watermark horizon are dropped and state for ids
@@ -433,18 +346,46 @@ def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def run_streaming_dedup_to_memory(
-    spark: SparkSession, events_dir: str, table: str = "dedup_events"
-) -> None:
+def run_to_memory(
+    stream: DataFrame, table: str, output_mode: str
+) -> StreamingQuery:
+    """Drain ``stream`` over all currently-available files into an
+    in-memory sink queryable as ``spark.table(table)``, blocking until
+    drained; returns the finished query (its ``recentProgress`` holds
+    the per-batch metrics). ``output_mode`` is the sink mode the
+    builder supports: ``complete`` for the window aggregations,
+    ``update`` for the per-user totals (last row per user = final
+    state), ``append`` for the join and dedup."""
     q = (
-        streaming_dedup(stream_events(spark, events_dir))
-        .writeStream.format("memory")
+        stream.writeStream.format("memory")
         .queryName(table)
-        .outputMode("append")
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return q
+
+
+@contextlib.contextmanager
+def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
+    """Run the body with the RocksDB state store provider, which
+    ``transformWithStateInPandas`` requires (the heap provider rejects
+    it), then restore the previous provider: ``spark.conf.set`` is
+    sticky on the shared session, and leaving RocksDB active would
+    silently move every LATER streaming query in the session onto a
+    different state store."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _mid_batch_fault(batch_id: int) -> None:

@@ -111,13 +111,17 @@ def test_stateful_user_totals_match_batch(spark, sf_dir, tmp_path):
     import shutil
 
     from bikes_data_warehouse_etl_spark.streaming.pipeline import (
-        run_user_totals_to_memory,
+        run_to_memory,
+        running_user_totals,
+        stream_events,
     )
 
     events_dir = str(tmp_path / "events_in")
     os.makedirs(events_dir)
     shutil.copy(f"{sf_dir}/events.parquet", events_dir)
-    run_user_totals_to_memory(spark, events_dir, table="ut_test")
+    run_to_memory(
+        running_user_totals(stream_events(spark, events_dir)), "ut_test", "update"
+    )
 
     # update-mode memory sink: the final row per user is the total
     final = {
@@ -158,14 +162,21 @@ def test_transform_with_state_totals_match_legacy_api(spark, sf_dir, tmp_path):
                     "driver worker cannot start in this container")
 
     from bikes_data_warehouse_etl_spark.streaming.pipeline import (
-        run_user_totals_to_memory,
-        run_user_totals_tws_to_memory,
+        rocksdb_state_store,
+        run_to_memory,
+        running_user_totals_tws,
+        stream_events,
     )
 
     events_dir = str(tmp_path / "events_tws")
     os.makedirs(events_dir)
     shutil.copy(f"{sf_dir}/events.parquet", events_dir)
-    run_user_totals_tws_to_memory(spark, events_dir, table="ut_tws")
+    with rocksdb_state_store(spark):
+        run_to_memory(
+            running_user_totals_tws(stream_events(spark, events_dir)),
+            "ut_tws",
+            "update",
+        )
     tws = {
         r["user_id"]: (r["n_events"], r["value_cents"])
         for r in spark.table("ut_tws").collect()

@@ -11,7 +11,10 @@ import pyspark.sql.functions as F
 from bikes_data_warehouse_etl_spark.plans import QUERIES
 from bikes_data_warehouse_etl_spark.streaming.pipeline import (
     run_scd1_stream,
-    run_windowed_counts_to_memory,
+    run_to_memory,
+    stream_events,
+    stream_stream_view_purchase_join,
+    windowed_event_counts,
 )
 
 
@@ -20,7 +23,11 @@ def test_streaming_window_counts_equal_batch(spark, sf_dir, tmp_path):
     os.makedirs(events_dir)
     shutil.copy(f"{sf_dir}/events.parquet", events_dir)
 
-    run_windowed_counts_to_memory(spark, events_dir, table="wc_test")
+    run_to_memory(
+        windowed_event_counts(stream_events(spark, events_dir)),
+        "wc_test",
+        "complete",
+    )
     stream_rows = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["value_cents"])
         for r in spark.table("wc_test").collect()
@@ -38,14 +45,13 @@ def test_stream_stream_join_matches_batch_pairs(spark, sf_dir, tmp_path):
     arrival, so one availableNow drain sees them all — no watermark
     finalization wait, unlike append-mode window tests)."""
     from bikes_data_warehouse_etl_spark.sources.parquet import read_table
-    from bikes_data_warehouse_etl_spark.streaming.pipeline import (
-        run_stream_stream_join_to_memory,
-    )
 
     events_dir = str(tmp_path / "ssj_in")
     os.makedirs(events_dir)
     shutil.copy(f"{sf_dir}/events.parquet", events_dir)
-    run_stream_stream_join_to_memory(spark, events_dir, table="ssj_test")
+    run_to_memory(
+        stream_stream_view_purchase_join(spark, events_dir), "ssj_test", "append"
+    )
     stream_pairs = {tuple(r) for r in spark.table("ssj_test").collect()}
 
     ev = read_table(spark, sf_dir, "events")

@@ -10,8 +10,9 @@ import os
 import pytest
 
 from bikes_data_warehouse_etl_spark.streaming.pipeline import (
-    run_streaming_dedup_to_memory,
+    run_to_memory,
     stream_events,
+    streaming_dedup,
     windowed_event_counts,
 )
 
@@ -109,7 +110,7 @@ def test_streaming_dedup_drops_replayed_ids(spark, tmp_path):
             (3, t0 + dt.timedelta(minutes=2), 1, "click", 3.0),
         ],
     )
-    run_streaming_dedup_to_memory(spark, src, table="dedup_test")
+    run_to_memory(streaming_dedup(stream_events(spark, src)), "dedup_test", "append")
     ids = sorted(r["event_id"] for r in spark.table("dedup_test").collect())
     assert ids == [1, 2, 3]  # id 2 passed exactly once
 

@@ -10,7 +10,9 @@ import pyspark.sql.functions as F
 
 from bikes_data_warehouse_etl_spark.plans import QUERIES
 from bikes_data_warehouse_etl_spark.streaming.pipeline import (
-    run_session_windows_to_memory,
+    run_to_memory,
+    session_window_counts,
+    stream_events,
 )
 
 
@@ -18,7 +20,11 @@ def test_session_windows_match_batch_sessionize(spark, sf_dir, tmp_path):
     events_dir = str(tmp_path / "events_in")
     os.makedirs(events_dir)
     shutil.copy(f"{sf_dir}/events.parquet", events_dir)
-    run_session_windows_to_memory(spark, events_dir, table="sw_test")
+    run_to_memory(
+        session_window_counts(stream_events(spark, events_dir)),
+        "sw_test",
+        "complete",
+    )
 
     stream = {
         (r["user_id"], r["start_es"]): r["n_events"]

@@ -55,11 +55,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bikes_data_warehouse_etl_spark.session import get_spark  # noqa: E402
 from bikes_data_warehouse_etl_spark.streaming.pipeline import (  # noqa: E402
+    run_scd1_stream,
+    run_to_memory,
     session_window_counts,
     stream_events,
     streaming_dedup,
     windowed_event_counts,
-    run_scd1_stream,
 )
 
 N_FILES = 16
@@ -83,8 +84,7 @@ def _flat_part_files(df, dest: str, n_files: int) -> int:
     return i
 
 
-def _drain(q) -> dict:
-    q.awaitTermination()
+def _progress(q) -> dict:
     prog = q.recentProgress
     state_rows = 0
     for p in prog:
@@ -118,41 +118,25 @@ def main() -> int:
 
     # 1. watermarked tumbling windows, complete mode
     t0 = time.perf_counter()
-    q = (
-        windowed_event_counts(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName("sb_tumbling")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    meta = _drain(q)
+    meta = _progress(run_to_memory(
+        windowed_event_counts(stream_events(spark, events_dir)),
+        "sb_tumbling", "complete",
+    ))
     record("tumbling_1h", n_events, time.perf_counter() - t0, meta)
 
     # 2. native session windows, complete mode
     t0 = time.perf_counter()
-    q = (
-        session_window_counts(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName("sb_sessions")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    meta = _drain(q)
+    meta = _progress(run_to_memory(
+        session_window_counts(stream_events(spark, events_dir)),
+        "sb_sessions", "complete",
+    ))
     record("session_30m", n_events, time.perf_counter() - t0, meta)
 
     # 3. streaming dedup, append mode
     t0 = time.perf_counter()
-    q = (
-        streaming_dedup(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName("sb_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    meta = _drain(q)
+    meta = _progress(run_to_memory(
+        streaming_dedup(stream_events(spark, events_dir)), "sb_dedup", "append"
+    ))
     record("dedup", n_events, time.perf_counter() - t0, meta)
 
     # 4. foreachBatch SCD1 merge of customer batches into parquet
@@ -206,15 +190,9 @@ def main() -> int:
             d = os.path.join(work, f"sat_{nf}")
             _flat_part_files(sat_ev, d, nf)
             t0 = time.perf_counter()
-            q = (
-                streaming_dedup(stream_events(spark, d))
-                .writeStream.format("memory")
-                .queryName(f"sb_sat_{nf}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            meta = _drain(q)
+            meta = _progress(run_to_memory(
+                streaming_dedup(stream_events(spark, d)), f"sb_sat_{nf}", "append"
+            ))
             wall = time.perf_counter() - t0
             saturation["arms"][f"batches_{nf}"] = {
                 "rows_per_batch": sat_n // nf,

@@ -13,8 +13,10 @@ average 27), so the min over repeated sweeps is the consistent
 estimator of plan cost — a single-shot sweep inherits whatever
 noise window each query happened to land in.
 
-Inputs are ``tools/run_suite.py`` artifacts (or a ``bench.py`` /
-driver BENCH json for the sf0.1 column — both carry ``queries``).
+Inputs are ``bench.py`` artifacts (``BENCH_latest_full.json`` copied
+aside per run; ``SPARK_GRAFT_SF_DIR`` picks the rung), per-round
+``BENCH_r*.json`` files, or the older sweep artifacts under
+``scaling_runs/`` — all carry ``queries``.
 Data volume steps 10x between adjacent rungs, so the fitted exponent
 is ``log10(t_sf10 / t_sf1)``: 1.0 = linear, <1 sub-linear (fixed
 overhead amortizing away), >1 super-linear. Queries whose exponent

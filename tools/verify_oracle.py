@@ -448,7 +448,7 @@ def main() -> int:
             continue
         # release localCheckpoint blocks between queries — a 315-query
         # sf10 run in one JVM otherwise accumulates checkpoint RDDs
-        # until the heap dies (same discipline as tools/run_suite.py)
+        # until the heap dies (same discipline as bench.py)
         unpersist_all(spark)
         if name in reused:
             r = reused[name]
