@@ -37,25 +37,19 @@ from bikes_data_warehouse_etl_spark.sources.csv import read_source_csv
 
 # Hive-partitioned fact writes cluster rows by the partition key so
 # each task holds whole dates (tasks x dates small files otherwise — a
-# listing-time DoS at 100 TB). Pure key-clustering hashes EVERY row of
-# a hot date into ONE task (spill/straggler at scale), so the
-# repartition key is (partition cols, pmod(hash, SALT)): SALT bounds
-# how many tasks a single date may fan out to. Default 1 keeps the
-# local ≤2-files-per-date-dir pin; on a cluster raise
-# SPARK_GRAFT_WRITE_SALT to ~(date_rows / target_task_rows).
-# maxRecordsPerFile is the in-task backstop: even a one-task date
-# splits into bounded parquet files.
-_WRITE_SALT = max(1, int(os.environ.get("SPARK_GRAFT_WRITE_SALT", "1")))
-_MAX_RECORDS_PER_FILE = int(
-    os.environ.get("SPARK_GRAFT_MAX_RECORDS_PER_FILE", "5000000")
-)
+# listing-time DoS at 100 TB). maxRecordsPerFile is the in-task
+# backstop: even a one-task date splits into bounded parquet files.
+_MAX_RECORDS_PER_FILE = 5_000_000
 
 
-def _cluster_for_write(df: DataFrame, partition_cols: list[str]) -> DataFrame:
-    keys = [F.col(c) for c in partition_cols]
-    if _WRITE_SALT > 1:
-        keys.append(F.pmod(F.xxhash64(*df.columns), F.lit(_WRITE_SALT)))
-    return df.repartition(*keys)
+def _write_parquet(
+    df: DataFrame, target: str, mode: str, partition_cols: list[str] | None
+) -> None:
+    w = df.repartition(*partition_cols).write if partition_cols else df.write
+    w = w.mode(mode).option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
+    if partition_cols:
+        w = w.partitionBy(*partition_cols)
+    w.parquet(target)
 
 
 # (csv file stem, ods table name, cleaning fn name, scd1 business key)
@@ -111,14 +105,7 @@ class BikesPipeline:
         table. Local-FS stand-in for a transactional table format.
         """
         staged = snapshot.next_snapshot_path(path)
-        if partition_cols:
-            df = _cluster_for_write(df, partition_cols)
-        w = df.write.mode("overwrite").option(
-            "maxRecordsPerFile", _MAX_RECORDS_PER_FILE
-        )
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(staged)
+        _write_parquet(df, staged, "overwrite", partition_cols)
         snapshot.commit_snapshot(path, staged)
 
     def _write(
@@ -137,14 +124,7 @@ class BikesPipeline:
             # for the whole write duration.
             self._replace_dir(df, path, partition_cols)
         else:
-            if partition_cols:
-                df = _cluster_for_write(df, partition_cols)
-            w = df.write.mode(mode).option(
-                "maxRecordsPerFile", _MAX_RECORDS_PER_FILE
-            )
-            if partition_cols:
-                w = w.partitionBy(*partition_cols)
-            w.parquet(path)
+            _write_parquet(df, path, mode, partition_cols)
 
     # ---------------- ODS load (entry point 1) ----------------
     def load_ods(self) -> None:

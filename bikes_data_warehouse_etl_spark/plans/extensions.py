@@ -9,8 +9,6 @@ basis-point similarity, left-to-right double folds).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
@@ -447,9 +445,7 @@ def q_neardup_jaccard_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 4e-7 for the pair that actually missed) at exactly 2x signature
 # cost. Below the threshold the narrow config is kept so the gated
 # sf0.001/0.01/0.1 plans (and their bench profile) are unchanged.
-_LSH_FAST_WIDE_DOCS = int(
-    os.environ.get("SPARK_GRAFT_LSH_WIDE_DOCS", "20000")
-)
+_LSH_FAST_WIDE_DOCS = 20_000
 
 
 def lsh_fast_params(n_docs: int) -> tuple[int, int]:

@@ -258,105 +258,11 @@ def sql_coorder_edge_ctes(min_coorders: int = _MIN_COORDERS) -> str:
         WHERE n_ord >= {min_coorders})"""
 
 
-def _lineitem_fingerprint(sf_dir: str) -> str:
-    """Cheap source fingerprint of the lineitem input (file count,
-    total bytes, max mtime ns) folded into the edge-snapshot cache key
-    — regenerated data at the SAME path must invalidate the cached
-    snapshot (round-7 judge finding: a path-only key silently reused a
-    stale graph). Pure driver-side os.stat; no Spark job."""
-    import os
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    n = size = mtime = 0
-    if os.path.isfile(src):
-        st = os.stat(src)
-        n, size, mtime = 1, st.st_size, st.st_mtime_ns
-    elif os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                st = os.stat(os.path.join(root, f))
-                n += 1
-                size += st.st_size
-                mtime = max(mtime, st.st_mtime_ns)
-    return f"{n}:{size}:{mtime}"
-
-
-def build_edges_snapshot(
-    spark: SparkSession,
-    sf_dir: str,
-    min_coorders: int = _MIN_COORDERS,
-    n_buckets: int = 32,
-) -> str:
-    """CTAS the canonical a<b co-order edge list ONCE per
-    (sf_dir, min_coorders) as a bucketed+sorted catalog table and
-    return its name — the shape a real 100x user runs: build the graph
-    once, query it many times.
-
-    All graph-family queries (pagerank, triangles, k-core, common
-    neighbors, Adamic-Adar, modularity, assortativity) start from this
-    same edge set, and at sf10 each paid the same ~25 s fact-scale
-    collect_set + pair-count build before doing any graph work.
-    Bucketing by ``a`` (sorted (a, b)) means downstream groupBy("a") /
-    joins on the src key read pre-partitioned buckets with NO exchange.
-    Idempotent: an existing table is reused (keyed by sf_dir hash and
-    min_coorders), so a suite run builds once.
-
-    Queries stay self-contained by default — the snapshot path is
-    opt-in via SPARK_GRAFT_EDGE_SNAPSHOT=1 (see ``co_order_edges``),
-    so the driver's oracle gate exercises the inline build while bench
-    suites amortize it.
-    """
-    import hashlib
-
-    tag = hashlib.md5(
-        f"{sf_dir.rstrip('/')}|{min_coorders}|{_lineitem_fingerprint(sf_dir)}"
-        .encode()
-    ).hexdigest()[:10]
-    tbl = f"edges_snap_{tag}"
-    if spark.catalog.tableExists(tbl):
-        return tbl
-    # clear an orphan managed-table location (a previous session's
-    # warehouse dir without a catalog entry): saveAsTable refuses to
-    # claim an existing location even in overwrite mode
-    import os
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(wh.removeprefix("file:"), tbl)
-    if os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
-    from bikes_data_warehouse_etl_spark.sources.sinks import write_bucketed
-
-    e = _co_order_edges_inline(spark, sf_dir, min_coorders)
-    write_bucketed(e, tbl, ["a"], n_buckets=n_buckets, sort_cols=["a", "b"])
-    return tbl
-
-
 def co_order_edges(
     spark: SparkSession, sf_dir: str, min_coorders: int = _MIN_COORDERS
 ) -> DataFrame:
-    """Canonical a<b co-order supplier edge list e(a, b).
-
-    With ``SPARK_GRAFT_EDGE_SNAPSHOT=1`` the family reads the shared
-    bucketed snapshot (``build_edges_snapshot`` — built on first use,
-    reused by every graph query after); by default it builds inline so
-    each query stays self-contained for the oracle gate. Results are
-    identical either way (the snapshot IS the inline build,
-    materialized) — pinned by tests/test_pipeline_ops16_17.py.
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_EDGE_SNAPSHOT") == "1":
-        return spark.table(build_edges_snapshot(spark, sf_dir, min_coorders))
-    return _co_order_edges_inline(spark, sf_dir, min_coorders)
-
-
-def _co_order_edges_inline(
-    spark: SparkSession, sf_dir: str, min_coorders: int = _MIN_COORDERS
-) -> DataFrame:
-    """Spark twin of `sql_coorder_edge_ctes`: basket-pattern edge build
+    """Canonical a<b co-order supplier edge list e(a, b), the Spark twin
+    of `sql_coorder_edge_ctes`: basket-pattern edge build
     — one collect_set shuffle on the order key, unordered pairs
     generated ROW-LOCALLY from each bounded basket, and because the
     basket is a SET, a plain COUNT per pair IS the distinct co-order

@@ -6,6 +6,12 @@ runtime (broadcast conversion, partition coalescing, skew-join
 splitting), shuffle partitions default to the local core count but are
 overridable via ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` for cluster runs,
 and Arrow is enabled for the (rare) pandas-UDF extension points.
+
+Four environment settings shape the session: ``SPARK_GRAFT_CPUS``
+(local cores, default: the CPUs this process may run on),
+``SPARK_GRAFT_MASTER``, ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` and
+``SPARK_GRAFT_DRIVER_MEM``. Any other Spark conf goes through
+``get_spark(extra_conf=...)``.
 """
 
 from __future__ import annotations
@@ -13,6 +19,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_INFER_FILTERS_FROM_GENERATE = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+)
 
 
 def get_spark(
@@ -26,15 +37,16 @@ def get_spark(
     Parameters
     ----------
     master:
-        Defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) when
-        no cluster master is configured. On a real cluster, pass
+        Defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+        CPUs this process may run on) when no cluster master is
+        configured. On a real cluster, pass
         ``None`` and let spark-submit supply the master.
     shuffle_partitions:
         Post-shuffle parallelism. With AQE on, this is the *upper
         bound*; AQE coalesces small partitions down. At 100 TB set this
         to ~2-3x total executor cores via env.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -63,44 +75,15 @@ def get_spark(
         # and nothing won outside noise — in local mode every extra
         # shuffle partition is pure fan-out cost (more sort runs, more
         # block fetches through one memory bus) with no extra machine
-        # to recruit. On a REAL cluster set this via env to ~2-4× total
-        # executor cores so heavy shuffles aren't capped at the static
-        # width while AQE still coalesces small stages.
+        # to recruit. On a REAL cluster pass it through ``extra_conf``
+        # at ~2-4× total executor cores so heavy shuffles aren't capped
+        # at the static width while AQE still coalesces small stages.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(shuffle_partitions)),
+            str(shuffle_partitions),
         )
         # --- Scan sizing: 128 MB splits keep partitions memory-safe ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # --- Generate-filter inference off (r11) ---
-        # InferFiltersFromGenerate adds `size(arr) > 0 AND isnotnull(arr)`
-        # below every explode; PushDownPredicates then substitutes the
-        # generator child's FULL defining expression into that filter and
-        # pushes it to the scan side. For this engine's document
-        # pipelines the child is the tokenize+shingle build (regex +
-        # 7 nested zip_with per row) — the most expensive row-local
-        # expression in the suite — so every shingle/minhash/LSH query
-        # evaluated it TWICE per row, and the duplicated copy landed
-        # BELOW the widen_scan exchange, pinned to the input's split
-        # count (one core on the testdata). The filter is semantically
-        # redundant for explode (an empty/null array emits no rows
-        # anyway); it only ever saves generator-machinery overhead when
-        # arrays are empty AND cheap to compute, which never holds
-        # here. Measured (same-JVM ABBA, sf0.1): the exploded-shingle
-        # stage 4.9 s → 0.5-1.2 s; dup_span_fraction 5.1-5.9 s →
-        # 1.5 s. Results bit-identical by construction (the rule only
-        # drops rows explode drops itself); the full DuckDB-oracle
-        # matrix re-certified after the change. Re-enable with
-        # SPARK_GRAFT_EXCLUDED_RULES="" if a future stored-array
-        # workload wants the inference back.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            os.environ.get(
-                "SPARK_GRAFT_EXCLUDED_RULES",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate",
-            ),
-        )
         # --- Arrow for the pandas-UDF extension points ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- Parquet TIMESTAMP(NANOS) (events.ts) is unreadable natively;
@@ -128,16 +111,41 @@ def get_spark(
         # (toPandas) — multi-million-row outputs at sf1+ exceed the 1g
         # default; 4g admits the legitimate big collects while still
         # capping a runaway one.
-        .config(
-            "spark.driver.maxResultSize",
-            os.environ.get("SPARK_GRAFT_MAX_RESULT", "4g"),
-        )
+        .config("spark.driver.maxResultSize", "4g")
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # --- Generate-filter inference off (r11) ---
+    # InferFiltersFromGenerate adds `size(arr) > 0 AND isnotnull(arr)`
+    # below every explode; PushDownPredicates then substitutes the
+    # generator child's FULL defining expression into that filter and
+    # pushes it to the scan side. For this engine's document
+    # pipelines the child is the tokenize+shingle build (regex +
+    # 7 nested zip_with per row) — the most expensive row-local
+    # expression in the suite — so every shingle/minhash/LSH query
+    # evaluated it TWICE per row, and the duplicated copy landed
+    # BELOW the widen_scan exchange, pinned to the input's split
+    # count (one core on the testdata). The filter is semantically
+    # redundant for explode (an empty/null array emits no rows
+    # anyway); it only ever saves generator-machinery overhead when
+    # arrays are empty AND cheap to compute, which never holds
+    # here. Measured (same-JVM ABBA, sf0.1): the exploded-shingle
+    # stage 4.9 s → 0.5-1.2 s; dup_span_fraction 5.1-5.9 s →
+    # 1.5 s. Results bit-identical by construction (the rule only
+    # drops rows explode drops itself); the full DuckDB-oracle
+    # matrix re-certified after the change. Appended after
+    # getOrCreate so a caller's configured exclusions survive.
+    rules = [
+        r.strip() for r in spark.conf.get(_EXCLUDED_RULES, "").split(",")
+        if r.strip()
+    ]
+    if _INFER_FILTERS_FROM_GENERATE not in rules:
+        spark.conf.set(
+            _EXCLUDED_RULES, ",".join(rules + [_INFER_FILTERS_FROM_GENERATE])
+        )
     return spark
 
 

@@ -41,24 +41,27 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
       division (epoch-ns ~1.7e18 exceeds double's 53-bit mantissa, so
       ``/ 1000`` via double would be off by ±1 µs — use ``div``).
     * parquet ``timestamp[us]`` with no timezone — Spark infers
-      ``TimestampNTZType``. Normalized by a cast that must interpret the
-      naive value as UTC (the generator's convention, and what the
-      DuckDB oracle does when extracting epochs). Spark resolves the
-      cast's timezone at *analysis* time, so we pin the session tz to
-      UTC while building the expression and restore it after — callers
-      on non-UTC sessions still get naive-as-UTC semantics.
+      ``TimestampNTZType``. The naive value is a UTC wall-clock time
+      (the generator's convention, and what the DuckDB oracle does when
+      extracting epochs), so it is rebuilt field by field with an
+      explicit ``'UTC'`` zone. A plain cast would resolve the SESSION
+      timezone; ``convert_timezone`` to the session zone and back is
+      an hour off inside a DST fall-back overlap. The expression reads
+      no session state, so concurrent readers never see a flipped
+      timezone.
     """
-    spark = df.sparkSession
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     if ts_type == "timestamp_ntz":
-        prev = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        try:
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", prev)
+        ts = F.col("ts")
+        return df.withColumn(
+            "ts",
+            F.make_timestamp(
+                F.year(ts), F.month(ts), F.dayofmonth(ts), F.hour(ts),
+                F.minute(ts), F.extract(F.lit("SECOND"), ts), F.lit("UTC"),
+            ),
+        )
     return df
 
 

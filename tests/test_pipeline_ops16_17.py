@@ -192,126 +192,6 @@ def test_length_gate_band(spark, sf_dir):
             assert row["n_kept"] >= 1
 
 
-def test_edges_snapshot_matches_inline_and_prunes_exchange(spark, sf_dir):
-    """SPARK_GRAFT_EDGE_SNAPSHOT=1: the graph family reads one shared
-    bucketed edge table; rows identical to the inline build, and a
-    groupBy on the bucket key plans with NO added Exchange (the
-    snapshot's reason to exist at 100x)."""
-    import os
-
-    from bikes_data_warehouse_etl_spark.plans.pipeline_ops16 import (
-        build_edges_snapshot,
-        co_order_edges,
-    )
-
-    inline = sorted(map(tuple, co_order_edges(spark, sf_dir).collect()))
-    tbl = build_edges_snapshot(spark, sf_dir)
-    assert spark.catalog.tableExists(tbl)
-    # idempotent: second call reuses, returns same name
-    assert build_edges_snapshot(spark, sf_dir) == tbl
-
-    os.environ["SPARK_GRAFT_EDGE_SNAPSHOT"] = "1"
-    try:
-        snap = co_order_edges(spark, sf_dir)
-        assert sorted(map(tuple, snap.collect())) == inline
-        # bucket pruning: per-src degree aggregate plans without an
-        # Exchange between scan and final aggregate
-        plan = (
-            snap.groupBy("a")
-            .count()
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan, plan[:2000]
-    finally:
-        del os.environ["SPARK_GRAFT_EDGE_SNAPSHOT"]
-
-
-def test_edges_snapshot_second_session_rebuilds_cleanly(spark, sf_dir):
-    """Verdict r8 task #7: the orphan-location path
-    (pipeline_ops16.build_edges_snapshot — a warehouse dir left by a
-    PREVIOUS session whose in-memory catalog died with it) had code but
-    no test. A second SparkSession in its own process, pointed at THIS
-    session's warehouse dir, must see an empty catalog, reclaim the
-    orphan location, rebuild cleanly under the same deterministic name,
-    and serve the same edge count. (Same-session reuse + no-exchange
-    plan shape is pinned by
-    test_edges_snapshot_matches_inline_and_prunes_exchange.)"""
-    import os
-    import subprocess
-    import sys
-
-    from bikes_data_warehouse_etl_spark.plans.pipeline_ops16 import (
-        build_edges_snapshot,
-    )
-
-    tbl = build_edges_snapshot(spark, sf_dir)
-    n1 = spark.table(tbl).count()
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    assert os.path.isdir(os.path.join(wh, tbl))  # location outlives session
-
-    script = f"""
-import sys
-sys.path.insert(0, "/root/repo")
-from bikes_data_warehouse_etl_spark.session import get_spark
-from bikes_data_warehouse_etl_spark.plans.pipeline_ops16 import (
-    build_edges_snapshot,
-)
-spark = get_spark(
-    "second-session", extra_conf={{"spark.sql.warehouse.dir": {wh!r}}}
-)
-assert not spark.catalog.tableExists({tbl!r}), "catalog must start fresh"
-t = build_edges_snapshot(spark, {sf_dir!r})
-assert t == {tbl!r}, t  # same deterministic cache key
-print("ROWS", spark.table(t).count())
-"""
-    out = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert f"ROWS {n1}" in out.stdout
-
-
-def test_edges_snapshot_invalidates_on_source_rewrite(spark, tmp_path):
-    """Round-7 judge finding: a path-only cache key silently reused a
-    stale edge snapshot after the parquet at the same path was
-    regenerated. The key now folds in a source fingerprint (file
-    count/bytes/mtime) — rewriting the source must yield a NEW table
-    whose contents match the inline build on the new data."""
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from bikes_data_warehouse_etl_spark.plans.pipeline_ops16 import (
-        build_edges_snapshot,
-        co_order_edges,
-    )
-
-    d = str(tmp_path / "sf")
-    os.makedirs(d)
-    li = os.path.join(d, "lineitem.parquet")
-    shutil.copy("/root/testdata/sf0.001/lineitem.parquet", li)
-
-    t1 = build_edges_snapshot(spark, d)
-    assert build_edges_snapshot(spark, d) == t1  # unchanged source: reuse
-
-    # regenerate the source at the SAME path (half the rows)
-    tab = pq.read_table(li)
-    pq.write_table(tab.slice(0, tab.num_rows // 2), li)
-
-    t2 = build_edges_snapshot(spark, d)
-    assert t2 != t1, "stale snapshot reused after source rewrite"
-    assert spark.table(t2).count() == co_order_edges(spark, d).count()
-
-
 def test_pair_packing_guard_raises_on_domain_overflow(spark):
     """functions/packing.py: a key outside [0, 2^31) must FAIL the
     query loudly (assert_true) instead of silently merging distinct

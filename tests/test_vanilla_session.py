@@ -58,3 +58,73 @@ def test_nanos_to_micros_is_exact_integer_division(spark):
         .first()
     )
     assert row.us == ns // 1000
+
+
+def _epoch_us(rows) -> dict[int, int]:
+    return {r.event_id: r.us for r in rows}
+
+
+def test_events_read_on_non_utc_session_matches_utc_from_two_threads(
+    spark, sf_dir
+):
+    """``normalize_event_ts`` reads naive ``events.ts`` as UTC without
+    touching the session timezone, so two threads reading through one
+    non-UTC session get exactly the UTC session's instants, and the
+    session keeps its zone."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyspark.sql.functions as F
+
+    from bikes_data_warehouse_etl_spark.sources.parquet import read_table
+
+    def read(s):
+        return _epoch_us(
+            read_table(s, sf_dir, "events")
+            .select("event_id", F.unix_micros("ts").alias("us"))
+            .collect()
+        )
+
+    want = read(spark)
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(lambda _: read(s), range(4)))
+    assert all(g == want for g in got)
+    assert s.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles"
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_naive_ts_is_utc_across_dst_gap_and_overlap(spark):
+    """A naive time inside the Los Angeles spring-forward gap, and both
+    UTC instants that fall in its fall-back overlap, keep their UTC
+    epoch under a Los Angeles session."""
+    import datetime as dt
+
+    import pyspark.sql.functions as F
+
+    from bikes_data_warehouse_etl_spark.sources.parquet import (
+        normalize_event_ts,
+    )
+
+    naive = [
+        "2024-03-10 02:30:00",  # LA local gap
+        "2024-11-03 08:30:00",  # 01:30 PDT
+        "2024-11-03 09:30:00",  # 01:30 PST
+        "1969-12-31 23:59:59.999999",
+    ]
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    df = s.createDataFrame(
+        [(i, v) for i, v in enumerate(naive)], "event_id long, s string"
+    ).select("event_id", F.col("s").cast("timestamp_ntz").alias("ts"))
+    got = _epoch_us(
+        normalize_event_ts(df)
+        .select("event_id", F.unix_micros("ts").alias("us"))
+        .collect()
+    )
+    epoch = dt.datetime(1970, 1, 1)
+    want = {
+        i: (dt.datetime.fromisoformat(v) - epoch) // dt.timedelta(microseconds=1)
+        for i, v in enumerate(naive)
+    }
+    assert got == want

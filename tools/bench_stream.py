@@ -1,6 +1,8 @@
 """Structured-Streaming throughput bench → STREAM_BENCH.json.
 
-The batch side has BENCH/WRITE_BENCH artifacts; this measures the
+The batch side has BENCH artifacts (and perfbench's ``bikes_refresh``
+for the pipeline writes; WRITE_BENCH.json is the historical record of
+the retired write bench); this measures the
 STREAMING surface the same way — real micro-batched runs over the
 sf0.1 events volume, wall-clocked end to end, one JSON line on stdout.
 

@@ -8,9 +8,10 @@ Two things accumulate across bench/suite runs with no lifecycle story
    grace window keeps the live + previous snapshot per table forever;
    after a quiet period the previous one is pure disk cost.
 2. **Orphaned scratch tables** in the Spark warehouse dir — bucketed
-   CTAS tables from prior sessions (``edges_snap_*`` graph snapshots,
-   bench scratch) whose in-memory catalog entries died with the
-   session, leaving bare directories.
+   CTAS tables from prior sessions (bench scratch, and the
+   ``edges_snap_*`` graph snapshots that older versions of the engine
+   wrote) whose in-memory catalog entries died with the session,
+   leaving bare directories.
 
 Usage::
 
@@ -44,8 +45,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bikes_data_warehouse_etl_spark.sources import snapshot  # noqa: E402
 
-# scratch tables recreated on demand (cache keys include a source
-# fingerprint, so a dropped edges_snap_* is simply rebuilt on next use)
+# scratch tables nothing reads back after their session; edges_snap_*
+# are graph snapshots that older versions of the engine cached and that
+# old warehouses still hold
 ORPHAN_PATTERNS = ("edges_snap_*", "bench_*", "pairs_*")
 
 
