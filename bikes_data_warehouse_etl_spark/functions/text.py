@@ -1,10 +1,9 @@
 """Text-analysis expressions for large-scale document pipelines.
 
 All JVM-side Column builders (zero Python UDFs): tokenization, word
-shingles, a cross-engine portable 64-bit content hash, minhash
-signatures, simhash, token statistics, language-ID heuristics, and
-document fingerprints. These are the building blocks for the dedup
-family in ``operators/dedup.py``.
+shingles, a cross-engine portable 64-bit content hash, simhash, token
+statistics, language-ID heuristics, and document fingerprints. These
+are the building blocks for the dedup family in ``operators/dedup.py``.
 
 Portability: ``hash64`` is md5-prefix based so DuckDB can reproduce it
 bit-for-bit (``CAST('0x'||substr(md5(x),1,15) AS BIGINT)``) — Spark's
@@ -83,25 +82,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     shifted slice (k+1 times per row). Linear, but in hot paths prefer
     the two-step :func:`word_shingles_from_tokens`."""
     return word_shingles_from_tokens(tokens(col), k)
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 8) -> Column:
-    """MinHash signature as array<bigint> of length ``n_hashes``.
-
-    Hash function *j* is ``hash64(j || ':' || shingle)`` — seed-prefix
-    family, reproducible in any engine with md5. ``array_min`` keeps the
-    whole signature computation row-local (no explode, no shuffle); NULL
-    for docs with no shingles.
-    """
-    # NB: no default-arg lambdas here — PySpark dispatches on lambda
-    # arity, and a second parameter would receive the element *index*
-    def hasher(j: int):
-        return lambda s: hash64(F.concat(F.lit(f"{j}:"), s))
-
-    sigs = [
-        F.array_min(F.transform(shingles, hasher(j))) for j in range(n_hashes)
-    ]
-    return F.array(*sigs)
 
 
 def simhash(col: Column | str, bits: int = 16) -> Column:

@@ -474,10 +474,11 @@ def neardup_components(
 
     Convergence is detected without a join: min-label propagation only
     ever DECREASES a node's label and never adds or drops nodes, so the
-    per-round label sum (exact, decimal — no overflow at any node
-    count) is strictly decreasing until fixpoint and equal iff no node
-    changed. That replaces the old per-round join+filter+count job with
-    a map-side-combinable aggregate over the just-checkpointed blocks.
+    per-round label sum is strictly decreasing until fixpoint and equal
+    iff no node changed. The sum is exact: a decimal(38,0) sum of long
+    labels (each < 2^63) cannot overflow below about 1e19 nodes. That
+    replaces the old per-round join+filter+count job with a
+    map-side-combinable aggregate over the just-checkpointed blocks.
     """
     # symmetrize with ONE pass over the pair pipeline: a union of two
     # selects re-evaluates the (expensive — shingle self-join) pairs
@@ -519,14 +520,14 @@ def neardup_components(
             labels.union(nbr)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            # eager: materializes every partition AND truncates lineage;
-            # the previous checkpoint is released only after this one
-            # has fully materialized (its blocks are the only source —
-            # there is no lineage to fall back on)
+            # eager: materializes every partition AND truncates lineage.
+            # unpersist() cannot free the previous round's blocks (a
+            # local checkpoint is not in the cache manager); the
+            # ContextCleaner frees them once that frame is garbage-
+            # collected, and max_iter bounds how many rounds pile up
             .localCheckpoint()
         )
         cur_sum = label_sum(new_labels)
-        labels.unpersist()
         labels = new_labels
         if cur_sum == prev_sum:
             converged = True

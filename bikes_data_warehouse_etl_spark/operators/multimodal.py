@@ -36,16 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# media row contract: id + media_type + payload + sidecar metadata
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("content", BinaryType(), True),
-        StructField("source_uri", StringType(), True),
-    ]
-)
-
 DECODED_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -116,61 +106,6 @@ def decode_media(media: DataFrame, batch_hint: int = 256) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.mapInPandas(process, schema=DECODED_SCHEMA)
-
-
-def decode_media_arrow(media: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of :func:`decode_media` — the same decode
-    contract expressed on raw ``pyarrow.RecordBatch`` iterators.
-
-    Why it exists: ``mapInPandas`` pays an Arrow→pandas→Arrow
-    conversion per batch (object boxing for binary columns is the
-    expensive part); ``mapInArrow`` hands the UDF the Arrow buffers
-    directly, so cheap per-row work (lengths via
-    ``pyarrow.compute.binary_length``, zero-copy) skips pandas
-    entirely and only the genuinely-Python decode touches Python
-    objects. Same ``DECODED_SCHEMA`` out; `tests/
-    test_similarity_multimodal.py` pins row-for-row equality with the
-    pandas path.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def process(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            content = batch.column(batch.schema.get_field_index("content"))
-            n_bytes = pc.cast(pc.binary_length(content), pa.int64())
-            py = content.to_pylist()
-            dims = [
-                _fake_decode(bytes(b)) if b is not None else (None, None, None)
-                for b in py
-            ]
-            feats = [
-                _byte_histogram(bytes(b)) if b is not None else None for b in py
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index("media_id")),
-                    batch.column(batch.schema.get_field_index("media_type")),
-                    n_bytes,
-                    pa.array([d[0] for d in dims], pa.int32()),
-                    pa.array([d[1] for d in dims], pa.int32()),
-                    pa.array([d[2] for d in dims], pa.int32()),
-                    pa.array(feats, pa.list_(pa.float64())),
-                ],
-                schema=pa.schema(
-                    [
-                        pa.field("media_id", pa.int64(), False),
-                        pa.field("media_type", pa.string(), False),
-                        pa.field("n_bytes", pa.int64()),
-                        pa.field("width", pa.int32()),
-                        pa.field("height", pa.int32()),
-                        pa.field("channels", pa.int32()),
-                        pa.field("features", pa.list_(pa.float64())),
-                    ]
-                ),
-            )
-
-    return media.mapInArrow(process, schema=DECODED_SCHEMA)
 
 
 def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:

@@ -96,56 +96,6 @@ def lsh_topk(
     )
 
 
-def write_ann_index(
-    df: DataFrame,
-    path: str,
-    n_bits: int = 8,
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the sign-LSH index: embeddings written hive-style
-    ``partitionBy('bucket')``.
-
-    This is the scale path the ``lsh_topk`` docstring promises: probes
-    against the written index filter on the *partition* column, so the
-    scan prunes to 1/2^n_bits of the directories before any vector math
-    runs (PartitionFilters in the plan — pinned by
-    ``tests/test_plan_shapes.py``). Write once, probe many.
-    """
-    from bikes_data_warehouse_etl_spark.sources.sinks import write_partitioned
-
-    indexed = df.withColumn("bucket", sign_lsh_bucket(F.col(vec_col), n_bits))
-    write_partitioned(indexed, path, ["bucket"], mode=mode)
-
-
-def lsh_topk_on_index(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    k: int = 10,
-    n_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 6,
-) -> DataFrame:
-    """Probe a ``write_ann_index`` table: the bucket equality lands on
-    the partition column → directory pruning, then exact cosine rank
-    inside the surviving bucket (TakeOrderedAndProject, no shuffle)."""
-    qbucket = sum(1 << i for i, v in enumerate(query_vec[:n_bits]) if v > 0)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("bucket") == F.lit(qbucket))
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(F.col(vec_col), query_vec), round_dp).alias(
-                "cos_sim"
-            ),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -166,6 +116,12 @@ def ivf_assign(
     # and ivf_topk's driver-side (-cos, cid) ranking, which would then
     # probe a different list than the tied vectors were assigned to
     centroids = sorted(centroids)
+    # temp names not already in df (case-insensitively, like Spark's
+    # resolver): withColumn would overwrite, then drop, a caller column
+    taken = {c.lower() for c in df.columns}
+    nrm_name, sims_name = "__nrm__", "__sims__"
+    while nrm_name in taken or sims_name in taken:
+        nrm_name, sims_name = f"_{nrm_name}", f"_{sims_name}"
     # redundant-fold elimination (vectors.py r11, ABBA-measured): the
     # row vector's norm is computed ONCE per row in its own projection
     # (the alias is non-cheap and referenced len(centroids) times, so
@@ -175,7 +131,7 @@ def ivf_assign(
     # is hoisted the same way: ``array_position(sims, array_max(sims))``
     # references it twice, which would otherwise duplicate all
     # len(centroids) dot folds per row.
-    nrm = F.col("__nrm__")
+    nrm = F.col(nrm_name)
     sims = F.array(
         *[
             F.when(
@@ -186,17 +142,17 @@ def ivf_assign(
             for _, vec in centroids
         ]
     )
-    s = F.col("__sims__")
+    s = F.col(sims_name)
     # argmax with lowest-index tie-break: array_position finds the first max
     best_idx = F.array_position(s, F.array_max(s)).cast("int")
     cid = F.element_at(
         F.array(*[F.lit(cid) for cid, _ in centroids]), best_idx
     )
     return (
-        df.withColumn("__nrm__", norm(F.col(vec_col)))
-        .withColumn("__sims__", sims)
+        df.withColumn(nrm_name, norm(F.col(vec_col)))
+        .withColumn(sims_name, sims)
         .withColumn("centroid_id", cid)
-        .drop("__nrm__", "__sims__")
+        .drop(nrm_name, sims_name)
     )
 
 

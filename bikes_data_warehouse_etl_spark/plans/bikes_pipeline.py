@@ -34,23 +34,7 @@ from bikes_data_warehouse_etl_spark.plans import bikes_dw, bikes_ods
 from bikes_data_warehouse_etl_spark.plans.date_dim import build_date_dim
 from bikes_data_warehouse_etl_spark.sources import snapshot
 from bikes_data_warehouse_etl_spark.sources.csv import read_source_csv
-
-# Hive-partitioned fact writes cluster rows by the partition key so
-# each task holds whole dates (tasks x dates small files otherwise — a
-# listing-time DoS at 100 TB). maxRecordsPerFile is the in-task
-# backstop: even a one-task date splits into bounded parquet files.
-_MAX_RECORDS_PER_FILE = 5_000_000
-
-
-def _write_parquet(
-    df: DataFrame, target: str, mode: str, partition_cols: list[str] | None
-) -> None:
-    w = df.repartition(*partition_cols).write if partition_cols else df.write
-    w = w.mode(mode).option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(target)
-
+from bikes_data_warehouse_etl_spark.sources.sinks import write_partitioned
 
 # (csv file stem, ods table name, cleaning fn name, scd1 business key)
 SCD1_TABLES = [
@@ -105,7 +89,7 @@ class BikesPipeline:
         table. Local-FS stand-in for a transactional table format.
         """
         staged = snapshot.next_snapshot_path(path)
-        _write_parquet(df, staged, "overwrite", partition_cols)
+        write_partitioned(df, staged, partition_cols)
         snapshot.commit_snapshot(path, staged)
 
     def _write(
@@ -124,7 +108,7 @@ class BikesPipeline:
             # for the whole write duration.
             self._replace_dir(df, path, partition_cols)
         else:
-            _write_parquet(df, path, mode, partition_cols)
+            write_partitioned(df, path, partition_cols, mode)
 
     # ---------------- ODS load (entry point 1) ----------------
     def load_ods(self) -> None:

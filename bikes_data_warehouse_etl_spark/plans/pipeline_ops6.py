@@ -67,9 +67,9 @@ def q_cdc_full_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (both are fact-sized). Unchanged keys — the overwhelming
     majority in a daily diff — are filtered before any further
     processing, so downstream merge work is proportional to the churn,
-    not the table. At 100 TB, snapshot partitioning by bucketed key
-    makes this a zero-exchange zipper join (sources/sinks.py
-    write_bucketed).
+    not the table. At 100 TB, snapshots written bucketed by the key
+    (``DataFrameWriter.bucketBy`` into a catalog table) make this a
+    zero-exchange zipper join.
     """
     base = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),

@@ -82,24 +82,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a parquet dataset whose files were written under EVOLVING
-    schemas (columns added over time — the normal life of a 100 TB
-    table fed by a changing upstream).
-
-    ``mergeSchema=true`` unions the footers of all files into one
-    schema; rows from older files read the added columns as null.
-    Default Spark behavior picks ONE footer and silently DROPS later
-    columns when an old file is sampled — at scale that is a
-    data-dependent heisenbug (whichever file is listed first wins), so
-    ingestion paths here always read evolving locations through this
-    helper. Cost: one footer read per file at planning (driver-side,
-    metadata only) — noticeable at millions of files, irrelevant below;
-    pin the final schema with a catalog table once it stabilizes.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:

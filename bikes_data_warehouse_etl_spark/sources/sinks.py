@@ -1,15 +1,11 @@
-"""Sink layer: partitioned / bucketed table writes (SURVEY §2.1
+"""Sink layer: partitioned table writes (SURVEY §2.1
 S4/S6-S8 generalized to the layouts that matter at 100 TB).
 
-* ``write_partitioned`` — hive-style directory partitioning; readers
-  filtering on the partition columns scan only matching directories
-  (PartitionFilters in the plan, verified by tests). The Spark analog
-  of the reference's daily-refresh cycle is facts partitioned by
-  year/date.
-* ``write_bucketed`` — catalog table bucketed+sorted by join key: two
-  bucketed tables with matching bucket counts join with NO shuffle on
-  either side (the co-located join the reference's single-node SQL
-  Server gets implicitly).
+* ``write_partitioned`` — the bikes pipeline's parquet writer:
+  hive-style directory partitioning; readers filtering on the
+  partition columns scan only matching directories (PartitionFilters
+  in the plan, verified by tests). The Spark analog of the reference's
+  daily-refresh cycle is facts partitioned by date.
 """
 
 from __future__ import annotations
@@ -18,32 +14,24 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Hive-partitioned writes cluster rows by the partition key so each
+# task holds whole partitions (tasks x dates small files otherwise — a
+# listing-time DoS at 100 TB). maxRecordsPerFile is the in-task
+# backstop: even a one-task date splits into bounded parquet files.
+_MAX_RECORDS_PER_FILE = 5_000_000
+
 
 def write_partitioned(
     df: DataFrame,
     path: str,
-    partition_cols: Sequence[str],
+    partition_cols: Sequence[str] | None,
     mode: str = "overwrite",
 ) -> None:
-    (
-        df.write.mode(mode)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
+    w = df.repartition(*partition_cols).write if partition_cols else df.write
+    w = w.mode(mode).option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
+    if partition_cols:
+        w = w.partitionBy(*partition_cols)
+    w.parquet(path)
 
 
 def compact_parquet(
@@ -79,41 +67,3 @@ def compact_parquet(
     writer.parquet(staged)
     snapshot.commit_snapshot(path, staged)
 
-
-def write_pairs(
-    df: DataFrame,
-    path: str,
-    block_cols: Sequence[str],
-    n_buckets: int = 64,
-    max_records_per_file: int = 5_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed sink for the pair-emitting operators (fuzzy_name_pairs,
-    lsh_candidates): at 100 TB their consumer is a partitioned WRITE,
-    not a returned DataFrame — pair volume (372M rows at sf10 for the
-    fuzzy emitter) makes the collect/return form a driver hazard and
-    the write layout the real contract.
-
-    Layout: hive directories on ``bucket = pmod(xxhash64(block key),
-    n_buckets)`` — the raw block/band key is high-cardinality (it
-    would explode the directory count), the hashed bucket is bounded
-    and STABLE, so a downstream cluster-merge job processes one bucket
-    directory at a time and a given block always lands in the same
-    bucket. Rows are clustered per bucket (one task per bucket dir,
-    whole blocks co-located) and sorted within partitions by the block
-    key for run-length locality; ``maxRecordsPerFile`` bounds any one
-    file even when a bucket is hot. The query forms stay unchanged for
-    the oracle gate; this is the scale path for their output.
-    """
-    import pyspark.sql.functions as F
-
-    bucket = F.pmod(F.xxhash64(*block_cols), F.lit(n_buckets)).cast("int")
-    (
-        df.withColumn("bucket", bucket)
-        .repartition("bucket")
-        .sortWithinPartitions("bucket", *block_cols)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy("bucket")
-        .parquet(path)
-    )

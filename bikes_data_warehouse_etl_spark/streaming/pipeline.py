@@ -482,103 +482,3 @@ def run_scd1_stream(
     )
     q.awaitTermination()
 
-
-def run_ingest_dedup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    source_schema: StructType,
-    corpus_path: str,
-    audit_path: str,
-    checkpoint_dir: str,
-) -> None:
-    """Continuous corpus ingest with base-snapshot dedup — the
-    streaming twin of the batch ``incremental_dedup_ingest`` query
-    (plans/pipeline_ops67.py): every micro-batch of documents is
-    classified against the ALREADY-ACCEPTED corpus by 64-bit content
-    hash (dup_of_base dropped, one keeper per novel content kept,
-    intra-batch extras dropped), novel keepers are APPENDED to the
-    corpus parquet, and a per-batch (batch_id, source, dedup_class,
-    n_docs) audit row set is appended for the ingest dashboard.
-
-    Scale notes: the batch side carries only (doc_id, source, hash)
-    into the classification — document text is re-attached to keepers
-    by doc_id at append time, so bodies never join against the corpus;
-    the corpus side is read as a hash column only (column-pruned
-    parquet scan).
-
-    Delivery contract: foreachBatch is AT-LEAST-ONCE — a crash between
-    or during the two writes replays the batch. Both sinks are
-    therefore idempotent per ``batch_id``: each batch OVERWRITES its
-    own hive partition (``audit/batch_id=N``,
-    ``corpus/ingest_batch_id=N``) instead of appending, so a replay
-    replaces rather than duplicates, and the combination is
-    effectively exactly-once for the observable table state. The
-    corpus still only grows across batches (no rewrite of accepted
-    data). On a cluster the two local parquet paths become
-    Delta/Iceberg tables and the per-partition overwrite an ACID
-    ``replaceWhere`` commit; the plan is unchanged.
-    """
-    import os
-
-    from bikes_data_warehouse_etl_spark.functions.text import hash64
-
-    def classify_and_append(batch: DataFrame, batch_id: int) -> None:
-        spark_ = batch.sparkSession
-        hashed = batch.select(
-            "*", hash64(F.col("text")).alias("__h__")
-        ).localCheckpoint(eager=True)
-        if os.path.isdir(corpus_path):
-            # exclude this batch's own partition: on an at-least-once
-            # replay it may hold a partial previous attempt, and the
-            # batch's docs must not classify as dups of themselves
-            # (partition-pruned — the filter never lists those files)
-            seen = (
-                spark_.read.parquet(corpus_path)
-                .filter(F.col("ingest_batch_id") != F.lit(int(batch_id)))
-                .select(hash64(F.col("text")).alias("__h__"))
-                .distinct()
-                .withColumn("__in_base__", F.lit(1))
-            )
-        else:
-            seen = None
-        from pyspark.sql import Window
-
-        w_min = F.min("doc_id").over(Window.partitionBy("__h__"))
-        cls = hashed.withColumn("__grp_min__", w_min)
-        if seen is not None:
-            cls = cls.join(seen, "__h__", "left")
-        else:
-            cls = cls.withColumn("__in_base__", F.lit(None).cast("int"))
-        cls = cls.withColumn(
-            "dedup_class",
-            F.when(F.col("__in_base__").isNotNull(), F.lit("dup_of_base"))
-            .when(F.col("doc_id") == F.col("__grp_min__"), F.lit("novel"))
-            .otherwise(F.lit("intra_batch_dup")),
-        ).localCheckpoint(eager=True)
-        audit = cls.groupBy("source", "dedup_class").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs")
-        )
-        # idempotent per-batch commit: overwrite THIS batch's hive
-        # partition (a replayed batch replaces its own rows; batch_id
-        # surfaces as a partition column on read)
-        audit.write.mode("overwrite").parquet(
-            f"{audit_path}/batch_id={batch_id}"
-        )
-        _mid_batch_fault(batch_id)  # crash point: audit written, corpus not
-        keep = cls.filter(F.col("dedup_class") == "novel").drop(
-            "__h__", "__grp_min__", "__in_base__", "dedup_class"
-        )
-        keep.write.mode("overwrite").parquet(
-            f"{corpus_path}/ingest_batch_id={batch_id}"
-        )
-
-    q = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(classify_and_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -1,9 +1,9 @@
 """Behavior tests for plans/pipeline_ops38.py (binary segmentation,
-odds ratio) and the mapInArrow decode twin.
+odds ratio).
 
 The DuckDB-oracle gate covers end-to-end equality; these pin the
-changepoint locator on a constructed level shift, the 2x2 accounting,
-and pandas-vs-arrow decode parity."""
+changepoint locator on a constructed level shift and the 2x2
+accounting."""
 
 from __future__ import annotations
 
@@ -70,33 +70,3 @@ def test_odds_ratio_accounting(spark, sf_dir):
     assert out["n_other_kept"] == d
     assert out["odds_ratio_milli"] == a * d * 1000 // max(b * c, 1)
 
-
-# ---------------------------------------------------------------------------
-# mapInArrow decode twin
-# ---------------------------------------------------------------------------
-def test_map_in_arrow_decode_equals_pandas_path(spark, sf_dir):
-    from bikes_data_warehouse_etl_spark.operators.multimodal import (
-        decode_media,
-        decode_media_arrow,
-        documents_as_media,
-    )
-    from bikes_data_warehouse_etl_spark.sources.parquet import read_table
-
-    media = documents_as_media(read_table(spark, sf_dir, "documents").limit(64))
-    a = (
-        decode_media(media)
-        .toPandas()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        decode_media_arrow(media)
-        .toPandas()
-        .sort_values("media_id")
-        .reset_index(drop=True)
-    )
-    assert list(a.columns) == list(b.columns)
-    for col in ["media_id", "media_type", "n_bytes", "width", "height", "channels"]:
-        assert (a[col] == b[col]).all(), col
-    for fa, fb in zip(a["features"], b["features"]):
-        assert list(fa) == list(fb)

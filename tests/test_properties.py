@@ -23,12 +23,8 @@ from hypothesis import strategies as st
 import pyspark.sql.functions as F
 
 from bikes_data_warehouse_etl_spark.functions.cleaning import age_at, age_bucket
-from bikes_data_warehouse_etl_spark.functions.text import (
-    minhash_signature,
-    normalize_text,
-    tokens,
-    word_shingles,
-)
+from bikes_data_warehouse_etl_spark.functions.text import normalize_text, tokens
+from bikes_data_warehouse_etl_spark.operators.dedup import minhash_mins
 
 _SETTINGS = dict(
     max_examples=12,
@@ -89,14 +85,13 @@ def test_minhash_order_insensitive(spark, words, seed):
     shuffled = words[:]
     random.Random(seed).shuffle(shuffled)
     df = spark.createDataFrame(
-        [(text, " ".join(shuffled))], "a string, b string"
+        [(0, text), (1, " ".join(shuffled))], "doc_id long, text string"
     )
-    row = df.select(
-        minhash_signature(word_shingles("a", 1)).alias("sa"),
-        minhash_signature(word_shingles("b", 1)).alias("sb"),
-    ).first()
+    sig = {
+        r["id"]: r[1:] for r in minhash_mins(df, shingle_k=1).collect()
+    }
     # 1-word shingles = token SET; permutation must not move any min
-    assert row["sa"] == row["sb"]
+    assert sig.get(0) == sig.get(1)
 
 
 @given(texts=st.lists(st.text(max_size=40), min_size=1, max_size=30))

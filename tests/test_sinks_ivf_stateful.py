@@ -1,5 +1,5 @@
-"""Partitioned/bucketed sinks (pruning + shuffle-free joins), IVF
-recall behavior, and the stateful streaming operator."""
+"""Partitioned sinks (static and dynamic pruning), IVF recall
+behavior, and the stateful streaming operators."""
 
 from __future__ import annotations
 
@@ -10,10 +10,7 @@ from bikes_data_warehouse_etl_spark.operators.similarity import (
     ivf_centroids_from_seed_rows,
     ivf_topk,
 )
-from bikes_data_warehouse_etl_spark.sources.sinks import (
-    write_bucketed,
-    write_partitioned,
-)
+from bikes_data_warehouse_etl_spark.sources.sinks import write_partitioned
 
 
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
@@ -32,62 +29,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert back.count() == expected
 
 
-def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 8, mode="overwrite")
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem",
-        ["o_orderkey"],
-        8,
-        mode="overwrite",
-    )
-    j = spark.table("b_lineitem").join(spark.table("b_orders"), "o_orderkey")
-    # co-bucketed sort-merge join: no shuffle exchange on either side
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    assert j.count() == li.count()  # every line item has its order
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_ann_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
-    """Verdict r1 #7: the sign-LSH pruning claim, end-to-end — write the
-    index partitioned by bucket, probe it, and pin the plan evidence:
-    the bucket equality must appear as a PartitionFilter (directory
-    pruning, not a post-scan filter) and the probe must stay
-    shuffle-free (TakeOrderedAndProject)."""
-    from bikes_data_warehouse_etl_spark.operators.similarity import (
-        lsh_topk,
-        lsh_topk_on_index,
-        write_ann_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = str(tmp_path / "ann_index")
-    write_ann_index(emb, path, n_bits=8)
-
-    qv = list(emb.filter(F.col("vec_id") == 7).first()["embedding"])
-    probe = lsh_topk_on_index(spark, path, qv, k=5, n_bits=8)
-
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters")[1].split("]")[0]
-    assert "bucket" in pf  # pruned at directory level
-    assert "Exchange" not in plan  # TakeOrderedAndProject, no shuffle
-    # same answer as the on-the-fly bucketed probe over the raw table
-    expected = [
-        (r["vec_id"], r["cos_sim"])
-        for r in lsh_topk(emb, qv, k=5, n_bits=8).collect()
-    ]
-    got = [(r["vec_id"], r["cos_sim"]) for r in probe.collect()]
-    assert got == expected
-
-
 def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     centroids = ivf_centroids_from_seed_rows(emb, 16)
@@ -104,6 +45,29 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     assert len(partial) == 10
     recall = len({r["vec_id"] for r in partial} & set(exact)) / 10
     assert recall >= 0.2  # conservative bound for random 64-d vectors
+
+
+def test_ivf_assign_keeps_caller_temp_named_column(spark, sf_dir):
+    """A caller column named like ivf_assign's temp columns comes back
+    unchanged, and the assignment equals the one without it."""
+    from bikes_data_warehouse_etl_spark.operators.similarity import ivf_assign
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 200
+    )
+    centroids = ivf_centroids_from_seed_rows(emb, 8)
+    tagged = emb.withColumn("__nrm__", F.lit("caller"))
+    out = ivf_assign(tagged, centroids)
+    assert out.columns == tagged.columns + ["centroid_id"]
+    got = {
+        r["vec_id"]: (r["__nrm__"], r["centroid_id"])
+        for r in out.select("vec_id", "__nrm__", "centroid_id").collect()
+    }
+    want = {
+        r["vec_id"]: ("caller", r["centroid_id"])
+        for r in ivf_assign(emb, centroids).select("vec_id", "centroid_id").collect()
+    }
+    assert got == want
 
 
 def test_stateful_user_totals_match_batch(spark, sf_dir, tmp_path):
@@ -232,36 +196,3 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, sf_dir, tmp_path):
     )
     assert abs(q.first()["total_qty"] - expected) < 1e-6
 
-
-def test_write_pairs_bucketed_layout(spark, sf_dir, tmp_path):
-    """write_pairs: bounded bucket directories, stable block->bucket
-    assignment, row-complete round-trip of the fuzzy pair emitter."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from bikes_data_warehouse_etl_spark.plans.coverage import (
-        q_fuzzy_name_pairs,
-    )
-    from bikes_data_warehouse_etl_spark.sources.sinks import write_pairs
-
-    pairs = q_fuzzy_name_pairs(spark, sf_dir)
-    out = str(tmp_path / "pairs")
-    write_pairs(pairs, out, block_cols=["id_a"], n_buckets=8)
-
-    dirs = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
-    assert 1 <= len(dirs) <= 8
-    back = spark.read.parquet(out)
-    assert back.count() == pairs.count()
-    # stable assignment: same id_a never straddles two buckets
-    assert (
-        back.groupBy("id_a")
-        .agg(F.countDistinct("bucket").alias("nb"))
-        .filter(F.col("nb") > 1)
-        .count()
-        == 0
-    )
-    # identical pair content
-    a = sorted(map(tuple, back.select("id_a", "id_b", "edit_dist").collect()))
-    b = sorted(map(tuple, pairs.collect()))
-    assert a == b

@@ -7,8 +7,7 @@ analogous guarantee: kill a foreachBatch stream MID-batch (between its
 two physical writes, via the ``_mid_batch_fault`` seam), restart from
 the same checkpoint, and assert the idempotent-overwrite invariant the
 module claims in prose — the restarted run converges to exactly the
-state of an unbroken run: no duplicate audit rows, no duplicate corpus
-docs, no duplicate SCD1 rows.
+state of an unbroken run: no duplicate SCD1 rows.
 """
 
 from __future__ import annotations
@@ -48,98 +47,6 @@ def _flatten(src: str, subs: list[str]) -> None:
                 os.rename(f"{src}/{sub}/{f}", f"{src}/{i:03d}.parquet")
                 i += 1
         shutil.rmtree(f"{src}/{sub}")
-
-
-def _doc_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("source", StringType(), True),
-            StructField("text", StringType(), True),
-        ]
-    )
-
-
-def _write_doc_batches(spark, src: str) -> None:
-    schema = _doc_schema()
-    os.makedirs(src)
-    batches = [
-        [(1, "s", "alpha text"), (2, "s", "beta text")],
-        [(3, "s", "alpha text"), (4, "s", "gamma text"), (5, "s", "gamma text")],
-        [(6, "s", "delta text"), (7, "s", "beta text")],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/b{i}"
-        )
-    _flatten(src, [f"b{i}" for i in range(len(batches))])
-
-
-def _corpus_state(spark, corpus: str):
-    return sorted(
-        (r["doc_id"], r["text"], r["ingest_batch_id"])
-        for r in spark.read.parquet(corpus).collect()
-    )
-
-
-def _audit_state(spark, audit: str):
-    return sorted(
-        (r["batch_id"], r["source"], r["dedup_class"], r["n_docs"])
-        for r in spark.read.parquet(audit).collect()
-    )
-
-
-def test_ingest_dedup_restart_converges(spark, tmp_path, monkeypatch):
-    """Kill batch 1 between its audit write and its corpus write, then
-    restart from the checkpoint: batch 1 replays, its audit partition
-    is OVERWRITTEN (not duplicated), and the final corpus + audit equal
-    an unbroken run byte-for-value."""
-    schema = _doc_schema()
-
-    # unbroken reference run
-    src_ref = str(tmp_path / "src_ref")
-    _write_doc_batches(spark, src_ref)
-    sp.run_ingest_dedup_stream(
-        spark, src_ref, schema,
-        str(tmp_path / "corpus_ref"), str(tmp_path / "audit_ref"),
-        str(tmp_path / "ckpt_ref"),
-    )
-    want_corpus = _corpus_state(spark, str(tmp_path / "corpus_ref"))
-    want_audit = _audit_state(spark, str(tmp_path / "audit_ref"))
-
-    # faulted run: crash mid-batch-1, restart from the same checkpoint
-    src = str(tmp_path / "src")
-    corpus, audit, ckpt = (
-        str(tmp_path / "corpus"), str(tmp_path / "audit"), str(tmp_path / "ckpt")
-    )
-    _write_doc_batches(spark, src)
-    state = _arm_once(monkeypatch, fail_batch_id=1)
-    with pytest.raises(Exception, match="mid-batch kill"):
-        sp.run_ingest_dedup_stream(spark, src, schema, corpus, audit, ckpt)
-    assert state["fired"]
-    # the kill landed mid-batch: batch 1's audit partition exists but
-    # its corpus partition does not — the half-state the restart must fix
-    assert os.path.isdir(f"{audit}/batch_id=1")
-    assert not os.path.isdir(f"{corpus}/ingest_batch_id=1")
-
-    monkeypatch.undo()
-    sp.run_ingest_dedup_stream(spark, src, schema, corpus, audit, ckpt)
-
-    assert _corpus_state(spark, corpus) == want_corpus
-    assert _audit_state(spark, audit) == want_audit
-    # explicit no-duplicates invariant (beyond equality): one audit row
-    # per (batch, class) and one corpus row per doc_id
-    audit_keys = [(b, c) for b, _s, c, _n in _audit_state(spark, audit)]
-    assert len(audit_keys) == len(set(audit_keys))
-    doc_ids = [d for d, _t, _b in _corpus_state(spark, corpus)]
-    assert len(doc_ids) == len(set(doc_ids))
 
 
 def test_scd1_stream_restart_converges(spark, tmp_path, monkeypatch):
