@@ -1,7 +1,7 @@
 """Text-analysis expressions for large-scale document pipelines.
 
 All JVM-side Column builders (zero Python UDFs): tokenization, word
-shingles, a cross-engine portable 64-bit content hash, simhash, token
+shingles, a cross-engine portable 64-bit content hash, token
 statistics, language-ID heuristics, and document fingerprints. These
 are the building blocks for the dedup family in ``operators/dedup.py``.
 
@@ -82,28 +82,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     shifted slice (k+1 times per row). Linear, but in hot paths prefer
     the two-step :func:`word_shingles_from_tokens`."""
     return word_shingles_from_tokens(tokens(col), k)
-
-
-def simhash(col: Column | str, bits: int = 16) -> Column:
-    """SimHash over whitespace tokens: bit b is set iff the sum of
-    (+1/-1 contributions of each token's hash bit b) is positive.
-
-    Row-local (aggregate over the token array); ``bits`` ≤ 63.
-    """
-    tok_hashes = F.transform(tokens(col), hash64)  # hash each token once
-
-    # closure factory: F.aggregate's merge lambda must take exactly
-    # (acc, x) — PySpark dispatches on arity
-    def bit_contrib(b: int):
-        return lambda a, h: a + F.when(
-            F.shiftright(h, b).bitwiseAND(1) == 1, 1
-        ).otherwise(-1)
-
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        contrib = F.aggregate(tok_hashes, F.lit(0).cast("long"), bit_contrib(b))
-        acc = acc + F.when(contrib > 0, F.lit(2**b).cast("long")).otherwise(0)
-    return acc
 
 
 def token_count(col: Column | str, toks: Column | None = None) -> Column:

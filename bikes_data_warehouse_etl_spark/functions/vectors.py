@@ -44,21 +44,14 @@ def norm(a: Column | str) -> Column:
     )
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity (NULL-safe on zero vectors)."""
-    d = dot(a, b)
-    na, nb = norm(a), norm(b)
-    return F.when((na > 0) & (nb > 0), d / (na * nb))
-
-
 # --- redundant-fold elimination (r11) ---------------------------------------
 # Spark evaluates higher-order functions (zip_with / aggregate lambdas)
 # in INTERPRETED mode, so every fold costs per-element Invoke overhead
-# per evaluation. ``cosine(a, b)`` pays THREE folds per row (dot + two
-# norms); in the common shapes that is mostly waste: a literal query
-# vector's norm is a driver-computable constant, and a join input's
-# per-row norm can be computed once in a projection instead of once
-# per PAIR. Both substitutions are bit-identical — same left-to-right
+# per evaluation. A cosine ``dot(a, b) / (norm(a) * norm(b))`` pays
+# THREE folds per row (dot + two norms); in the common shapes that is
+# mostly waste: a literal query vector's norm is a driver-computable
+# constant, and a join input's per-row norm can be computed once in a
+# projection instead of once per PAIR. Both substitutions are bit-identical — same left-to-right
 # IEEE-double accumulate, same operands into the final divide.
 # (An alternative — unrolling the folds into flat codegen arithmetic —
 # was ABBA-measured and REJECTED: at bench row counts the multi-
@@ -80,8 +73,9 @@ def norm_value(values) -> float:
 
 
 def cosine_lit(a: Column | str, values) -> Column:
-    """Bit-identical twin of ``cosine(a, F.array(*lits))`` for a
-    driver-known query vector: the literal side's norm collapses to a
+    """Cosine of ``a`` against a driver-known query vector, NULL when
+    either norm is zero. Bit-identical to ``dot / (norm(a) * norm(q))``
+    over ``q = F.array(*lits)``: the literal side's norm collapses to a
     precomputed double (one fewer interpreted fold per row; the
     ``nb > 0`` guard constant-folds away)."""
     nb = norm_value(values)

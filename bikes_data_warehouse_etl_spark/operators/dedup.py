@@ -28,7 +28,6 @@ import pyspark.sql.functions as F
 from bikes_data_warehouse_etl_spark.functions.text import (
     fingerprint,
     hash64,
-    hash64_fast,
     tokens,
     word_shingles_from_tokens,
 )
@@ -381,10 +380,10 @@ def simhash_per_doc(
     """Per-document SimHash signature: (id, simhash).
 
     Computed explode-wise: one md5 per token, then ``bits`` conditional
-    sums in a single map-side-combined aggregation (the per-row
-    array-fold variant — functions/text.py ``simhash`` — re-evaluates
-    the token pipeline once per bit under interpreted higher-order
-    functions; this shape is linear in tokens). Shared by
+    sums in a single map-side-combined aggregation (a per-row
+    array-fold form would re-evaluate the token pipeline once per bit
+    under interpreted higher-order functions; this shape is linear in
+    tokens). Shared by
     :func:`simhash_groups` (exact-signature grouping) and the
     multi-probe Hamming-neighbor join (plans/pipeline_ops33.py).
     """

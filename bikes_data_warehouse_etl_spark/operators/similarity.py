@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-Two strategies:
+Three strategies:
 
 * ``brute_force_topk`` — exact cosine top-k against a query vector.
   The per-row cosine is a codegen'd array expression; top-k collapses
@@ -15,9 +15,10 @@ Two strategies:
   partition pruning turns a full scan into a handful of buckets; recall
   is traded via n_bits/probes.
 
-* ``knn_join_bucketed`` — all-pairs k-NN restricted to shared buckets:
-  the scalable self-join shape (bucket-equi-join bounds the quadratic
-  blowup to within-bucket pairs).
+* ``knn_basket_bucketed`` — all-pairs cosine restricted to shared
+  buckets: each bucket's vectors are collected once and paired
+  row-locally, which bounds the quadratic blowup to within-bucket
+  pairs without a self-join.
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from bikes_data_warehouse_etl_spark.functions.vectors import (
-    cosine,
     cosine_lit,
     dot,
     norm,
@@ -204,40 +204,6 @@ def ivf_topk(
     return brute_force_topk(candidates, query_vec, k, vec_col, id_col, round_dp)
 
 
-def knn_join_bucketed(
-    df: DataFrame,
-    n_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    min_cos_bp: int = 0,
-    round_dp: int = 6,
-) -> DataFrame:
-    """Within-bucket all-pairs cosine (id_a < id_b) — the bounded
-    self-join for near-dup detection over embeddings.
-
-    ``min_cos_bp`` filters pairs below a cosine threshold expressed in
-    basis points (integer, engine-portable).
-    """
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        sign_lsh_bucket(F.col(vec_col), n_bits).alias("bucket"),
-    )
-    left = b.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), "bucket")
-    right = b.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), "bucket")
-    pairs = left.join(right, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            F.floor(F.round(cosine("v_a", "v_b"), round_dp) * 10000)
-            .cast("long")
-            .alias("cos_bp"),
-        )
-        .filter(F.col("cos_bp") >= min_cos_bp)
-    )
-
-
 def knn_basket_bucketed(
     df: DataFrame,
     n_bits: int = 8,
@@ -246,24 +212,24 @@ def knn_basket_bucketed(
     min_cos_bp: int = 0,
     round_dp: int = 6,
 ) -> DataFrame:
-    """Basket form of `knn_join_bucketed` — identical output, no join.
+    """Within-bucket all-pairs cosine (id_a < id_b) as ``cos_bp``, the
+    cosine in integer basis points; pairs below ``min_cos_bp`` drop.
 
-    The join form duplicates every vector once per pair it appears in
-    (bucket size ~b ⇒ each vector crosses the join operator b times:
-    ~30 GB of duplicated arrays at sf10). Here each bucket's vectors
-    are collected ONCE into a sorted basket (one shuffle of |rows|
+    A bucket self-join would duplicate every vector once per pair it
+    appears in (bucket size ~b ⇒ each vector crosses the join operator
+    b times: ~30 GB of duplicated arrays at sf10). Here each bucket's
+    vectors are collected ONCE into a sorted basket (one shuffle of |rows|
     structs) and all C(b, 2) pairs are generated and scored ROW-LOCALLY
     inside a single codegen'd higher-order expression — the
     `co_order_edges` basket pattern applied to vectors.
 
     Float-exactness is preserved by construction, not luck: the
-    per-pair cosine reuses the SAME `dot` fold (left-to-right double
-    accumulation) the join form evaluates, and per-vector norms are
-    computed once per vector BEFORE collecting — the same expression on
-    the same input, so the division sees bitwise-identical operands and
-    the DuckDB oracle keeps hash-matching. `array_sort` on (id, …)
+    per-pair cosine is the left-to-right double `dot` fold over the
+    product of `norm` folds, and per-vector norms are computed once
+    per vector BEFORE collecting, so the division sees the operands
+    the DuckDB mirror computes and the oracle keeps hash-matching. `array_sort` on (id, …)
     structs makes in-basket order ascending by id, so emitted pairs are
-    canonically id_a < id_b like the join's filter.
+    canonically id_a < id_b.
 
     Skew note: a pathological hot bucket serializes its C(b, 2) work
     on one core; the quadratic WORK is inherent to the query's

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from bikes_data_warehouse_etl_spark.operators.merge import scd1_merge, scd2_merge
@@ -36,16 +35,16 @@ from bikes_data_warehouse_etl_spark.sources import snapshot
 from bikes_data_warehouse_etl_spark.sources.csv import read_source_csv
 from bikes_data_warehouse_etl_spark.sources.sinks import write_partitioned
 
-# (csv file stem, ods table name, cleaning fn name, scd1 business key)
+# (csv file stem, ods table name, cleaning fn, scd1 business key)
 SCD1_TABLES = [
-    ("Customer", "customer", "clean_customer", ["customer_id"]),
-    ("Address", "address", "clean_address", ["ADDRESSID"]),
-    ("BusinessPartner", "businesspartner", "clean_business_partner", ["PARTNERID"]),
-    ("ProductCategory", "productcategory", "clean_product_category", ["PRODCATEGORYID"]),
-    ("ProductDetail", "productdetail", "clean_product_detail", ["PRODUCTID"]),
-    ("Store", "store", "clean_store", ["StoreID"]),
-    ("SalesOrder", "salesorder", "clean_sales_order", ["SalesOrderID"]),
-    ("SalesOrderItems", "salesorderitems", "clean_sales_order_items", ["SalesOrderItemsID"]),
+    ("Customer", "customer", bikes_ods.clean_customer, ["customer_id"]),
+    ("Address", "address", bikes_ods.clean_address, ["ADDRESSID"]),
+    ("BusinessPartner", "businesspartner", bikes_ods.clean_business_partner, ["PARTNERID"]),
+    ("ProductCategory", "productcategory", bikes_ods.clean_product_category, ["PRODCATEGORYID"]),
+    ("ProductDetail", "productdetail", bikes_ods.clean_product_detail, ["PRODUCTID"]),
+    ("Store", "store", bikes_ods.clean_store, ["StoreID"]),
+    ("SalesOrder", "salesorder", bikes_ods.clean_sales_order, ["SalesOrderID"]),
+    ("SalesOrderItems", "salesorderitems", bikes_ods.clean_sales_order_items, ["SalesOrderItemsID"]),
 ]
 
 
@@ -114,11 +113,10 @@ class BikesPipeline:
     def load_ods(self) -> None:
         """Clean + SCD-merge all nine source tables into the ODS."""
         # 8 SCD1 tables (ref tables at E:19..:720, Customer..SalesOrderItems)
-        for csv_name, table, clean_fn, keys in SCD1_TABLES:
+        for csv_name, table, fn, keys in SCD1_TABLES:
             raw = read_source_csv(
                 self.spark, os.path.join(self.source_dir, f"{csv_name}.csv"), csv_name
             )
-            fn = getattr(bikes_ods, clean_fn)
             src = fn(raw, self.as_of_date) if table == "customer" else fn(raw)
             if self._exists("ods", table):
                 merged = scd1_merge(self.read("ods", table), src, keys)

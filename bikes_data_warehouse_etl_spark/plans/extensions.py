@@ -17,7 +17,6 @@ from bikes_data_warehouse_etl_spark.functions.text import (
     lang_id_guess,
     punct_ratio,
     quality_score,
-    simhash,
     stopword_count,
     token_count,
 )

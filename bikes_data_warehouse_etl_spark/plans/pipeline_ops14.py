@@ -1,9 +1,8 @@
 """Round-4 batch 14: time-interval event joins, training-chunk
 generation, rolling range-window revenue, and a fixed-iteration
 PageRank — four operator families the engine hadn't expressed yet:
-the interval-join pair machinery behind the new STREAM-STREAM join
-twin (streaming/pipeline.py stream_stream_view_purchase_join), the
-token-window chunker every context-length-bounded training pipeline
+the interval-join pair machinery (equi key plus a time-range
+residual), the token-window chunker every context-length-bounded training pipeline
 runs, RANGE-frame windows (vs the ROWS frames used elsewhere), and
 iterative graph algebra with an unrolled differential oracle.
 

@@ -495,8 +495,8 @@ def q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     summarized per 1024-wide z-bucket: each bucket pins BOTH dimensions
     into a ≤32-value range (p_max-p_min ≤ 31, s_max-s_min ≤ 31 — the
     locality guarantee, visible directly in the output). Sorting a
-    write by zval (``df.sortWithinPartitions(zval)`` before
-    `sources/sinks.py compact_parquet`) gives every parquet row-group
+    write by zval (``df.sortWithinPartitions(zval)`` before the
+    parquet write) gives every parquet row-group
     tight min/max stats on *both* columns, so scans filtered on either
     key prune row groups — the multi-dimensional clustering trick
     single-column sorts can't do.

@@ -65,27 +65,29 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one synthetic table.
+def read_events_raw(spark: SparkSession, path: str) -> DataFrame:
+    """Scan event parquet with ``ts`` in the type Spark reads it as.
 
-    ``events.ts`` needs the ``nanosAsLong`` conf *before* the scan in
-    case the files are TIMESTAMP(NANOS) (harmless otherwise), then
-    :func:`normalize_event_ts` handles whichever physical encoding the
-    files actually carry — ``read_table`` must behave identically under
-    ANY SparkSession, not just :func:`session.get_spark`.
+    Sets ``spark.sql.legacy.parquet.nanosAsLong`` before the scan, so
+    TIMESTAMP(NANOS) files arrive as ``bigint`` epoch-nanos instead of
+    failing (harmless for every other encoding): event reads must
+    behave identically under ANY SparkSession, not just
+    :func:`session.get_spark`. Spark's own reader then decides the
+    type: INT96 and UTC-adjusted micros read as ``timestamp``, naive
+    micros as ``timestamp_ntz``, plain INT64 as ``bigint``. The batch
+    reader and the events stream (which takes its schema from this
+    frame) both pass the result through :func:`normalize_event_ts`.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        df = normalize_event_ts(df)
-    return df
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in names}
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one synthetic table; ``events.ts`` comes back normalized."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        return normalize_event_ts(read_events_raw(spark, path))
+    return spark.read.parquet(path)
 
 
 def widen_scan(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # Hive-partitioned writes cluster rows by the partition key so each
 # task holds whole partitions (tasks x dates small files otherwise — a
@@ -32,38 +32,4 @@ def write_partitioned(
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int = 1,
-    partition_cols: Sequence[str] | None = None,
-) -> None:
-    """Small-files compaction: rewrite a parquet table into
-    ``target_files`` files (per partition when ``partition_cols``).
-
-    Streaming/incremental appends accumulate small files; at 100 TB the
-    file-listing and per-file open costs dominate scans long before
-    data volume does. Run this as the maintenance pass (Delta's
-    OPTIMIZE equivalent). Commit is the crash-consistent
-    manifest-pointer protocol of ``sources.snapshot`` — the compacted
-    copy is written to a fresh snapshot dir and the table symlink is
-    atomically retargeted, so readers never observe a missing or
-    partial table (fault-injection-tested in
-    tests/test_snapshot_swap.py).
-    """
-    from bikes_data_warehouse_etl_spark.sources import snapshot
-
-    df = spark.read.parquet(path)
-    staged = snapshot.next_snapshot_path(path)
-    writer = (
-        df.repartition(target_files, *partition_cols)
-        if partition_cols
-        else df.repartition(target_files)
-    ).write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staged)
-    snapshot.commit_snapshot(path, staged)
 

@@ -5,16 +5,15 @@ The reference re-runs its batch ETL "time to time"; the streaming
 equivalents here share the *same* builder functions as the batch path:
 
 * ``stream_events``        — file-source stream over event parquet
-  (schema pinned per the probed wire encoding; ``ts`` normalized by
-  the same helper as the batch reader in sources/parquet.py, so the
-  streaming twins stay value-identical to their batch twins)
+  (schema taken from a batch read of the drop dir, and ``ts``
+  normalized by the same helpers as the batch reader in
+  sources/parquet.py, so the streaming twins stay value-identical to
+  their batch twins)
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation,
   the streaming twin of the batch ``events_tumbling`` query
-* ``stream_stream_view_purchase_join`` — watermarked stream-stream
-  interval join, the streaming twin of ``interval_join_purchases``
-* ``running_user_totals`` / ``running_user_totals_tws`` — custom
-  per-key state on both stateful APIs (applyInPandasWithState and
-  Spark 4's transformWithStateInPandas), pinned equal by test
+* ``session_window_counts`` — native session windows, the streaming
+  twin of the batch ``events_sessionize`` query
+* ``streaming_dedup``      — exact event_id dedup within the watermark
 * ``run_scd1_stream``      — foreachBatch incremental SCD1 merge: each
   micro-batch upserts into the target (the streaming form of the
   reference's per-run SCD loads)
@@ -27,92 +26,32 @@ drop-directory/Kafka source unchanged.
 
 from __future__ import annotations
 
-import contextlib
-import glob
-import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 import pyspark.sql.functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
+from pyspark.sql.types import StructType
+
+from bikes_data_warehouse_etl_spark.sources.parquet import (
+    normalize_event_ts,
+    read_events_raw,
 )
 
-from bikes_data_warehouse_etl_spark.sources.parquet import normalize_event_ts
 
-
-def _events_stream_schema(ts_is_long: bool) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType(), True),
-            StructField(
-                "ts", LongType() if ts_is_long else TimestampNTZType(), True
-            ),
-            StructField("user_id", LongType(), True),
-            StructField("event_type", StringType(), True),
-            StructField("value", DoubleType(), True),
-            StructField("props", StringType(), True),
-        ]
-    )
-
-
-def _events_ts_is_long(events_dir: str) -> bool:
-    """Probe the parquet footer of one file already in the drop dir.
-
-    A file-source stream needs its schema pinned up front, but the event
-    generator has shipped ``ts`` both as INT64 epoch-nanos (readable as
-    ``LongType``) and as ``timestamp[us]`` NTZ — the same split the
-    batch reader adapts to per-DataFrame in
-    :func:`..sources.parquet.normalize_event_ts`. One footer read at
-    stream-construction time (driver-side, metadata only — no data
-    pages) picks the wire type. An EMPTY drop dir is undecidable and
-    raises: guessing here once mis-scaled every event time 1000x when
-    the generator changed encodings — callers starting a stream before
-    any data lands must pass ``ts_is_long`` explicitly.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if os.path.isfile(events_dir):
-        files = [events_dir]
-    else:
-        files = sorted(glob.glob(os.path.join(events_dir, "*.parquet")))
-    if not files:
-        raise ValueError(
-            f"no parquet files in {events_dir!r} to probe the ts encoding "
-            "from — pass stream_events(..., ts_is_long=True/False) "
-            "explicitly when starting a stream on an empty directory"
-        )
-    ts_type = pq.read_schema(files[0]).field("ts").type
-    if pa.types.is_integer(ts_type):
-        return True
-    # timestamp[ns] only reads under nanosAsLong → also the long path
-    return pa.types.is_timestamp(ts_type) and ts_type.unit == "ns"
-
-
-def stream_events(
-    spark: SparkSession, events_dir: str, ts_is_long: bool | None = None
-) -> DataFrame:
+def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """File-source stream over event parquet files dropped into a dir.
 
-    ``ts`` normalization matches the batch reader exactly (same
-    :func:`normalize_event_ts` helper), so the streaming twins stay
-    value-identical to their oracle-checked batch twins under either
-    testdata encoding. ``ts_is_long`` overrides the footer probe —
-    required when the drop dir is still empty at stream start.
+    The stream's schema is the batch schema of the files already in the
+    dir (:func:`read_events_raw`, one small schema-inference job), and
+    ``ts`` goes through the batch reader's :func:`normalize_event_ts`,
+    so the streaming twins stay value-identical to their oracle-checked
+    batch twins under every ``ts`` encoding Spark reads. The dir must
+    hold at least one file when the stream is built.
     """
-    if ts_is_long is None:
-        ts_is_long = _events_ts_is_long(events_dir)
-    if ts_is_long:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = read_events_raw(spark, events_dir).schema
     raw = (
-        spark.readStream.schema(_events_stream_schema(ts_is_long))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(events_dir)
     )
@@ -168,174 +107,6 @@ def session_window_counts(
     )
 
 
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: a
-    per-user running (event count, value-cents total) maintained across
-    micro-batches — the extension point for operators Spark's built-in
-    streaming aggregations can't express (per-key custom state
-    machines, CEP-ish logic).
-
-    State is one row per user (two longs) — flat in users, independent
-    of stream length. Emits the updated totals for every user seen in
-    the current micro-batch.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType(), False),
-            StructField("n_events", LongType(), False),
-            StructField("value_cents", LongType(), False),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType(), False),
-            StructField("cents", LongType(), False),
-        ]
-    )
-
-    def update(key, pdf_iter, state: GroupState):
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            cents += int(round(pdf["value"].fillna(0.0) * 100).sum())
-        state.update((n, cents))
-        import pandas as pd
-
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running totals as :func:`running_user_totals`,
-    on Spark 4's ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (object-style StatefulProcessor, typed
-    per-key state handles, optional timers/TTL, and RocksDB-backed
-    state so per-key state spills instead of living in executor heap).
-    Both implementations are kept: the twin test pins them
-    final-state-equal, so the engine can migrate stateful pipelines
-    across the API generations with proof of equivalence.
-
-    Requires the RocksDB state store provider (start the query inside
-    :func:`rocksdb_state_store`); state is one (n, cents)
-    pair per user — flat in users, independent of stream length.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType(), False),
-            StructField("n_events", LongType(), False),
-            StructField("value_cents", LongType(), False),
-        ]
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            state_schema = StructType(
-                [
-                    StructField("n", LongType(), True),
-                    StructField("cents", LongType(), True),
-                ]
-            )
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, cents = self._state.get()
-            else:
-                n, cents = 0, 0
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(round(pdf["value"].fillna(0.0) * 100).sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TotalsProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def stream_stream_view_purchase_join(
-    spark: SparkSession,
-    events_dir: str,
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join: purchases joined to the same
-    user's views in the trailing hour — the streaming twin of the
-    batch ``interval_join_purchases`` pair predicate
-    (plans/pipeline_ops14.py). Both sides are watermarked, and the
-    time-range condition (``v_es ∈ (es − 3600, es]``) is what lets
-    Spark bound join state: a buffered view can be evicted once the
-    watermark passes its latest possible match (view ts + 1 h), so
-    state is O(events per watermark horizon), flat over an unbounded
-    stream. Inner join: matches emit as soon as both sides arrive —
-    no watermark wait (contrast outer, which must hold rows open
-    until the watermark proves no match is coming).
-
-    Emits one row per (purchase, view) PAIR — the aggregation to
-    per-purchase counts happens downstream exactly as in batch.
-
-    ``how="left_outer"`` keeps view-less purchases: their null-padded
-    rows emit only once the watermark proves no matching view can
-    still arrive (watermark past the purchase time), so an
-    ``availableNow`` drain does NOT include outer rows for the stream
-    tail — a later batch must advance the watermark first (the same
-    two-run finalization the append-mode window tests pin).
-    """
-    ev = stream_events(spark, events_dir)
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id",
-        "user_id",
-        F.col("ts").alias("p_ts"),
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user_id"),
-        F.col("ts").alias("v_ts"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("v_cents"),
-    )
-    return (
-        p.withWatermark("p_ts", watermark)
-        .join(
-            v.withWatermark("v_ts", watermark),
-            (F.col("user_id") == F.col("v_user_id"))
-            & (F.col("v_ts") > F.col("p_ts") - F.expr("INTERVAL 3600 SECONDS"))
-            & (F.col("v_ts") <= F.col("p_ts")),
-            how,
-        )
-        .select(
-            "event_id",
-            "user_id",
-            F.unix_timestamp("p_ts").cast("long").alias("es"),
-            F.unix_timestamp("v_ts").cast("long").alias("v_es"),
-            "v_cents",
-        )
-    )
-
-
 def streaming_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup: each event_id passes once; duplicate
     replays within the watermark horizon are dropped and state for ids
@@ -354,8 +125,7 @@ def run_to_memory(
     drained; returns the finished query (its ``recentProgress`` holds
     the per-batch metrics). ``output_mode`` is the sink mode the
     builder supports: ``complete`` for the window aggregations,
-    ``update`` for the per-user totals (last row per user = final
-    state), ``append`` for the join and dedup."""
+    ``append`` for the dedup."""
     q = (
         stream.writeStream.format("memory")
         .queryName(table)
@@ -365,27 +135,6 @@ def run_to_memory(
     )
     q.awaitTermination()
     return q
-
-
-@contextlib.contextmanager
-def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
-    """Run the body with the RocksDB state store provider, which
-    ``transformWithStateInPandas`` requires (the heap provider rejects
-    it), then restore the previous provider: ``spark.conf.set`` is
-    sticky on the shared session, and leaving RocksDB active would
-    silently move every LATER streaming query in the session onto a
-    different state store."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _mid_batch_fault(batch_id: int) -> None:

@@ -1,31 +1,33 @@
-"""Every engine module and top-level def has a caller outside tests.
+"""Every engine module and top-level def has a caller outside tests,
+and every package module uses what it imports.
 
 A pure ``ast`` scan (no Spark session). The callers are the non-test
 code: the package itself, ``tools/``, ``perfbench/``, ``bench.py`` and
-``__spark_entry__.py``. Two properties:
+``__spark_entry__.py``. Three properties:
 
 * every module of the package is imported by one of them, where the
   modules that ``plans/__init__.py`` discovers count as imported;
-* every undecorated top-level function or class of the package is
-  named by one of them outside its own definition: as a name, an
-  attribute, an imported name, or a word of a string. Strings count
-  because the pipeline dispatches by name (``SCD1_TABLES`` lists the
-  cleaning functions as strings), so a docstring mention counts too.
+* every top-level function or class of the package is named by one of
+  them outside its own definition: as a name, an attribute or an
+  imported name. A word in a string or docstring is not a caller.
+  Only the queries registered with the registry's ``@_q`` decorator
+  are skipped, because the registry is their caller;
+* every name a package module (other than an ``__init__``) imports is
+  used in that module or listed in its ``__all__``. An import inside a
+  ``try`` whose handler catches ``ImportError`` is an availability
+  probe and counts as used.
 
-Decorated defs are skipped: a decorator such as ``@register`` or
-``pandas_udf`` is itself the caller. A surface that only its own tests
-call fails here; delete it with its tests, or give it a real caller.
+A surface that only its own tests call fails here; delete it with its
+tests, or give it a real caller.
 """
 
 from __future__ import annotations
 
 import ast
-import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "bikes_data_warehouse_etl_spark"
-_WORD = re.compile(r"[A-Za-z_]\w*")
 
 # The only surfaces kept without a non-test caller, each with its reason.
 KEEP_MODULES = {
@@ -40,9 +42,19 @@ KEEP_DEFS = {
     "write action; the pipeline run record builds on it",
     f"{PKG}.operators.quality.duplicate_keys": "the reference's primary-key "
     "constraint as a check",
+    f"{PKG}.operators.quality.null_violations": "the reference's NOT NULL "
+    "constraint as a check",
     f"{PKG}.operators.quality.check_report": "the reference's NOT NULL / PK "
     "constraints as one report",
+    f"{PKG}.sources.snapshot.repair_table": "the manual crash-recovery entry "
+    "point; every commit runs the same _repair_locked",
+    f"{PKG}.sources.snapshot.resolve_for_read": "the snapshot-isolated read "
+    "pin that the module's contract documents",
+    f"{PKG}.operators.dedup.lsh_dropped_buckets": "the checked recall "
+    "precondition of lsh_candidates_fast's oracle equality",
 }
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _module_name(path: Path) -> str:
@@ -111,15 +123,11 @@ def _package_modules() -> dict[str, Path]:
 
 def _names_used(path: Path, tree: ast.Module) -> set[tuple[str, str | None]]:
     """(name, enclosing top-level def) for every name, attribute and
-    imported name, and every word of a string or docstring."""
+    imported name."""
     mod = _module_name(path)
     used: set[tuple[str, str | None]] = set()
     for top in tree.body:
-        owner = (
-            f"{mod}.{top.name}"
-            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-            else None
-        )
+        owner = f"{mod}.{top.name}" if isinstance(top, _DEFS) else None
         for node in ast.walk(top):
             if isinstance(node, ast.Name):
                 used.add((node.id, owner))
@@ -127,9 +135,15 @@ def _names_used(path: Path, tree: ast.Module) -> set[tuple[str, str | None]]:
                 used.add((node.attr, owner))
             elif isinstance(node, ast.alias):
                 used.add((node.name.rsplit(".", 1)[-1], owner))
-            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-                used.update((w, owner) for w in _WORD.findall(node.value))
     return used
+
+
+def _is_registered_query(top: ast.stmt) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+        and d.func.id == "_q"
+        for d in top.decorator_list
+    )
 
 
 def _orphan_modules() -> set[str]:
@@ -146,14 +160,55 @@ def _orphan_defs() -> set[str]:
     orphans = set()
     for mod, path in _package_modules().items():
         for top in _parse(path).body:
-            if not isinstance(
-                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or top.decorator_list:
+            if not isinstance(top, _DEFS) or _is_registered_query(top):
                 continue
             qual = f"{mod}.{top.name}"
             if not any(n == top.name and owner != qual for n, owner in used):
                 orphans.add(qual)
     return orphans
+
+
+def _catches_import_error(handler: ast.ExceptHandler) -> bool:
+    types = (
+        handler.type.elts if isinstance(handler.type, ast.Tuple)
+        else [handler.type]
+    )
+    return any(
+        isinstance(t, ast.Name)
+        and t.id in ("ImportError", "ModuleNotFoundError")
+        for t in types
+    )
+
+
+def _unused_imports(path: Path) -> set[str]:
+    """Names ``path`` binds by import but never reads, outside
+    ``__all__`` and ``ImportError`` probes."""
+    tree = _parse(path)
+    probes = {
+        id(n)
+        for t in ast.walk(tree)
+        if isinstance(t, ast.Try) and any(map(_catches_import_error, t.handlers))
+        for stmt in t.body
+        for n in ast.walk(stmt)
+    }
+    bound: set[str] = set()
+    for node in ast.walk(tree):
+        if id(node) in probes:
+            continue
+        if isinstance(node, ast.Import):
+            bound.update(a.asname or a.name.split(".")[0] for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound.update(a.asname or a.name for a in node.names)
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    exported = {
+        e.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+        for e in ast.walk(node.value)
+        if isinstance(e, ast.Constant)
+    }
+    return bound - used - exported
 
 
 def test_every_module_has_a_non_test_importer():
@@ -167,3 +222,13 @@ def test_every_top_level_def_has_a_non_test_caller():
     orphans = _orphan_defs()
     assert sorted(orphans - KEEP_DEFS.keys()) == []
     assert sorted(KEEP_DEFS.keys() - orphans) == []
+
+
+def test_package_modules_use_what_they_import():
+    unused = {
+        f"{mod}.{name}"
+        for mod, path in _package_modules().items()
+        if path.name != "__init__.py"
+        for name in _unused_imports(path)
+    }
+    assert sorted(unused) == []

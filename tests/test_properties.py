@@ -20,8 +20,6 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-import pyspark.sql.functions as F
-
 from bikes_data_warehouse_etl_spark.functions.cleaning import age_at, age_bucket
 from bikes_data_warehouse_etl_spark.functions.text import normalize_text, tokens
 from bikes_data_warehouse_etl_spark.operators.dedup import minhash_mins

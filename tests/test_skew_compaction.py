@@ -1,15 +1,12 @@
-"""Salted joins / two-phase aggregation equal their plain forms;
-compaction reduces file counts without changing data."""
+"""Salted joins / two-phase aggregation equal their plain forms."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pyspark.sql.functions as F
 
 from bikes_data_warehouse_etl_spark.operators.skew import salted_join, two_phase_agg
-from bikes_data_warehouse_etl_spark.sources.sinks import compact_parquet
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -36,20 +33,6 @@ def test_two_phase_agg_equals_direct(spark, sf_dir):
         for r in two_phase_agg(li, ["l_orderkey"], ["l_quantity"], salt=4).collect()
     }
     assert two == direct
-
-
-def test_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "frag")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    orders.repartition(16).write.parquet(path)  # fragmented
-    n_before = len(glob.glob(f"{path}/*.parquet"))
-    assert n_before >= 16
-    rows_before = sorted(map(tuple, spark.read.parquet(path).collect()))
-
-    compact_parquet(spark, path, target_files=2)
-    n_after = len(glob.glob(f"{path}/*.parquet"))
-    assert n_after == 2
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == rows_before
 
 
 def test_salted_join_rejects_outer_on_replicated_side(spark):

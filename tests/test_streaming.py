@@ -1,10 +1,12 @@
-"""Structured Streaming: windowed counts match the batch twin; the
-foreachBatch SCD1 sink upserts across micro-batches."""
+"""Structured Streaming: windowed counts match the batch twin; an
+INT96 events drop dir streams as its batch read; the foreachBatch SCD1
+sink upserts across micro-batches."""
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pyspark.sql.functions as F
 
@@ -13,7 +15,6 @@ from bikes_data_warehouse_etl_spark.streaming.pipeline import (
     run_scd1_stream,
     run_to_memory,
     stream_events,
-    stream_stream_view_purchase_join,
     windowed_event_counts,
 )
 
@@ -39,43 +40,37 @@ def test_streaming_window_counts_equal_batch(spark, sf_dir, tmp_path):
     assert stream_rows == batch_rows
 
 
-def test_stream_stream_join_matches_batch_pairs(spark, sf_dir, tmp_path):
-    """The watermarked stream-stream interval join must emit exactly
-    the pair set of the batch predicate (inner matches emit on
-    arrival, so one availableNow drain sees them all — no watermark
-    finalization wait, unlike append-mode window tests)."""
-    from bikes_data_warehouse_etl_spark.sources.parquet import read_table
+def test_events_stream_on_int96_drop_dir_matches_batch(spark, sf_dir, tmp_path):
+    """Spark writes timestamps as INT96 by default, and pyarrow reads
+    INT96 as timestamp[ns], so a footer probe takes the files for
+    epoch-nanos longs. The stream's schema comes from Spark's own read
+    of the drop dir instead, and the drain equals the batch read."""
+    import pyarrow.parquet as pq
 
-    events_dir = str(tmp_path / "ssj_in")
+    from bikes_data_warehouse_etl_spark.sources.parquet import (
+        normalize_event_ts,
+        read_events_raw,
+        read_table,
+    )
+
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    staging = str(tmp_path / "int96_staging")
+    read_table(spark, sf_dir, "events").coalesce(2).write.parquet(staging)
+    events_dir = str(tmp_path / "int96_in")
     os.makedirs(events_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", events_dir)
-    run_to_memory(
-        stream_stream_view_purchase_join(spark, events_dir), "ssj_test", "append"
-    )
-    stream_pairs = {tuple(r) for r in spark.table("ssj_test").collect()}
+    for f in sorted(os.listdir(staging)):
+        if f.endswith(".parquet"):
+            shutil.move(os.path.join(staging, f), events_dir)
+    schema = pq.ParquetFile(
+        os.path.join(events_dir, sorted(os.listdir(events_dir))[0])
+    ).schema
+    assert schema.column(schema.names.index("ts")).physical_type == "INT96"
 
-    ev = read_table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.unix_timestamp("ts").cast("long").alias("es")
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user_id"),
-        F.unix_timestamp("ts").cast("long").alias("v_es"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("v_cents"),
-    )
-    batch_pairs = {
-        tuple(r)
-        for r in p.join(
-            v,
-            (F.col("user_id") == F.col("v_user_id"))
-            & (F.col("v_es") > F.col("es") - 3600)
-            & (F.col("v_es") <= F.col("es")),
-        )
-        .select("event_id", "user_id", "es", "v_es", "v_cents")
-        .collect()
-    }
-    assert stream_pairs == batch_pairs
-    assert len(stream_pairs) > 0
+    run_to_memory(stream_events(spark, events_dir), "int96_test", "append")
+    batch = normalize_event_ts(read_events_raw(spark, events_dir))
+    got = Counter(map(tuple, spark.table("int96_test").collect()))
+    assert got == Counter(map(tuple, batch.collect()))
+    assert sum(got.values()) == read_table(spark, sf_dir, "events").count()
 
 
 def test_scd1_stream_upserts_across_batches(spark, tmp_path):

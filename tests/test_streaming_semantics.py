@@ -128,81 +128,3 @@ def test_failfast_csv_rejects_malformed_rows(spark, tmp_path):
     with pytest.raises(Exception) as exc:
         df.collect()
     assert "Malformed" in str(exc.value) or "FAILFAST" in str(exc.value)
-
-
-def test_left_outer_stream_stream_join_finalizes_after_watermark(spark, tmp_path):
-    """Left-outer stream-stream interval join: a matched purchase emits
-    its pair immediately; a view-less purchase's null row emits only
-    after a LATER batch advances the watermark past the purchase time
-    (the outer-emission contract — state can't prove 'no match' until
-    the watermark does)."""
-    from bikes_data_warehouse_etl_spark.streaming.pipeline import (
-        stream_stream_view_purchase_join,
-    )
-
-    src = str(tmp_path / "loj_src")
-    ckpt = str(tmp_path / "loj_ckpt")
-    out = str(tmp_path / "loj_out")
-    t0 = dt.datetime(2024, 3, 1, 10, 0, 0)
-
-    def drain() -> None:
-        q = (
-            stream_stream_view_purchase_join(spark, src, how="left_outer")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # run 1: user 1 purchase with a matching view 30 min earlier;
-    # user 2 purchase with NO view
-    _write_events(
-        spark,
-        f"{src}/part-000.parquet",
-        [
-            (1, t0 - dt.timedelta(minutes=30), 1, "view", 5.0),
-            (2, t0, 1, "purchase", 20.0),
-            (3, t0, 2, "purchase", 30.0),
-        ],
-    )
-    drain()
-    after_run1 = {
-        (r["event_id"], r["v_es"])
-        for r in spark.read.parquet(out).collect()
-    }
-    # inner match emitted; the view-less purchase is still open state
-    assert (2, int((t0 - dt.timedelta(minutes=30)).timestamp())) in after_run1
-    assert not any(eid == 3 for eid, _ in after_run1)
-
-    # run 2: 18:00 events advance the watermark (2h) to 16:00 — far
-    # past 10:00. Two subtleties this test exists to document: (a) the
-    # join watermark is min() across BOTH branch watermarks, and each
-    # branch only sees its own event_type — a late 'click' advances
-    # neither, so the late events must be a view AND a purchase; (b)
-    # the watermark COMMITS at batch end, so the unmatched purchase is
-    # evicted-and-emitted in the NEXT batch — run 3 supplies it (the
-    # same one-batch lag the append-mode window test pins).
-    _write_events(
-        spark,
-        f"{src}/part-001.parquet",
-        [
-            (9, t0 + dt.timedelta(hours=8), 3, "view", 1.0),
-            (10, t0 + dt.timedelta(hours=8, minutes=1), 3, "purchase", 2.0),
-        ],
-    )
-    drain()
-    _write_events(
-        spark,
-        f"{src}/part-002.parquet",
-        [
-            (11, t0 + dt.timedelta(hours=8, minutes=30), 4, "view", 1.0),
-            (12, t0 + dt.timedelta(hours=8, minutes=31), 4, "purchase", 2.0),
-        ],
-    )
-    drain()
-    rows = {r["event_id"]: r for r in spark.read.parquet(out).collect()}
-    assert rows[3]["v_es"] is None and rows[3]["v_cents"] is None
-    assert rows[3]["user_id"] == 2

@@ -170,22 +170,15 @@ def main() -> int:
             normalize_event_ts,
         )
 
-        # normalize ts to a real TIMESTAMP before writing the drop
-        # files: make_sf1 datasets carry nanos-as-long ts, and a drop
-        # dir mixing long and INT96 encodings breaks the stream's
-        # fixed schema — normalizing makes the sat dirs byte-identical
-        # in shape to the base-scenario dirs
+        # normalize ts to a real TIMESTAMP, then write it as NTZ
+        # (INT64 micros) like the base-scenario drop dirs, so every arm
+        # streams the same wire encoding whatever the sf dir carries
+        # (nanos-as-long, INT96 or micros)
         import pyspark.sql.functions as F
 
         sat_ev = normalize_event_ts(
             spark.read.parquet(os.path.join(sat_dir, "events.parquet"))
-        ).withColumn(
-            # pin the on-disk encoding to the base scenarios' ts
-            # flavor (NTZ -> INT64 micros): an LTZ ts writes INT96,
-            # which the stream's footer probe mis-reads as nanos-long
-            "ts",
-            F.col("ts").cast("timestamp_ntz"),
-        )
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         sat_n = sat_ev.count()
         saturation = {"sf_dir": sat_dir, "n_events": sat_n, "arms": {}}
         for nf in (64, 16, 4, 1):
