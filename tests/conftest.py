@@ -9,6 +9,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+# the reference's nine SourceData CSVs, where a checkout of it is present
+REFERENCE_SOURCE = "/root/reference/SourceData"
 
 # Tests commit snapshots seconds apart and assert count-retention GC
 # outcomes; the production time floor (SPARK_GRAFT_SNAPSHOT_MIN_AGE,
@@ -37,3 +39,19 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def bikes_source(tmp_path_factory) -> str:
+    """Directory of the nine bikes source CSVs (FIXTURES.md section 1).
+
+    The reference's own SourceData where it exists; otherwise the seeded
+    day-1 extract of ``perfbench.bikes_source``, which has the reference
+    row counts and its load-bearing quirks."""
+    if os.path.isdir(REFERENCE_SOURCE):
+        return REFERENCE_SOURCE
+    from perfbench.bikes_source import BikesSource, write_extract
+
+    out = str(tmp_path_factory.mktemp("bikes_source"))
+    write_extract(BikesSource(1, replicas=1).day1_rows(), out)
+    return out

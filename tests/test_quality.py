@@ -36,13 +36,13 @@ def test_orphan_rows_and_report(spark):
     assert report == {"dups": 0, "orphans": 1}
 
 
-def test_bikes_ods_invariants(spark, tmp_path_factory):
+def test_bikes_ods_invariants(spark, tmp_path_factory, bikes_source):
     """The loaded ODS satisfies the reference's declared PK constraints."""
     from bikes_data_warehouse_etl_spark.plans.bikes_pipeline import BikesPipeline
 
     whdir = str(tmp_path_factory.mktemp("bikes_wh_dq"))
     p = BikesPipeline(
-        spark, "/root/reference/SourceData", whdir, "2022-01-15", "2022-01-15 18:00:00"
+        spark, bikes_source, whdir, "2022-01-15", "2022-01-15 18:00:00"
     )
     p.load_ods()
     assert duplicate_keys(p.read("ods", "customer"), ["customer_id"]).count() == 0
@@ -50,7 +50,8 @@ def test_bikes_ods_invariants(spark, tmp_path_factory):
     # SCD2 invariant expressed as a DQ check: one current row per key
     current = p.read("ods", "product").filter(F.col("CURRENT_FLAG") == 1)
     assert duplicate_keys(current, ["PRODUCTID"]).count() == 0
-    # the reference's known orphan items (5 rows → order 500000334)
+    # the source's known orphan items (5 rows → order 500000334,
+    # FIXTURES.md §1)
     orphans = orphan_rows(
         p.read("ods", "salesorderitems"),
         p.read("ods", "salesorder"),

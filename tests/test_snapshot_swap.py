@@ -222,13 +222,13 @@ def test_legacy_migration_crash_recovers(spark, tmp_path, monkeypatch, op, nth):
 
 
 def test_pipeline_scd2_crash_mid_swap_keeps_old_state(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, bikes_source
 ):
-    """End-to-end on the reference's own CSVs: crash the snapshot flip
-    inside a day-2 SCD2 product merge; the ODS product table must
-    still serve day-1 data instantly (no repair step), and re-running
-    the day-2 load must converge to the same state as an uncrashed
-    two-day run."""
+    """End-to-end on the ``bikes_source`` fixture's CSVs: crash the
+    snapshot flip inside a day-2 SCD2 product merge; the ODS product
+    table must still serve day-1 data instantly (no repair step), and
+    re-running the day-2 load must converge to the same state as an
+    uncrashed two-day run."""
     import csv
     import shutil
 
@@ -236,12 +236,11 @@ def test_pipeline_scd2_crash_mid_swap_keeps_old_state(
         BikesPipeline,
     )
 
-    source = "/root/reference/SourceData"
     # batch 2: bump one product price so day 2 genuinely changes state
     src2 = str(tmp_path / "batch2")
     os.makedirs(src2)
-    for f in os.listdir(source):
-        shutil.copy(os.path.join(source, f), src2)
+    for f in os.listdir(bikes_source):
+        shutil.copy(os.path.join(bikes_source, f), src2)
     with open(os.path.join(src2, "Product.csv")) as fh:
         rows = list(csv.reader(fh))
     for r in rows[1:]:
@@ -252,7 +251,7 @@ def test_pipeline_scd2_crash_mid_swap_keeps_old_state(
 
     def run_two_days(whdir, crash_op=None):
         BikesPipeline(
-            spark, source, whdir, "2022-01-15", "2022-01-15 18:00:00"
+            spark, bikes_source, whdir, "2022-01-15", "2022-01-15 18:00:00"
         ).load_ods()
         p2 = BikesPipeline(
             spark, src2, whdir, "2022-02-01", "2022-02-01 09:00:00"

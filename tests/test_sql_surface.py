@@ -13,15 +13,14 @@ from bikes_data_warehouse_etl_spark.sql_surface import (
     run_dw_sql,
 )
 
-SOURCE = "/root/reference/SourceData"
 AS_OF = "2022-01-15"
 RUN_TS = "2022-01-15 18:00:00"
 
 
 @pytest.fixture(scope="module")
-def wh(spark, tmp_path_factory):
+def wh(spark, tmp_path_factory, bikes_source):
     whdir = str(tmp_path_factory.mktemp("bikes_wh_sql"))
-    p = BikesPipeline(spark, SOURCE, whdir, AS_OF, RUN_TS)
+    p = BikesPipeline(spark, bikes_source, whdir, AS_OF, RUN_TS)
     p.run()
     register_ods_views(p)
     return p

@@ -38,7 +38,7 @@ def test_session_windows_match_batch_sessionize(spark, sf_dir, tmp_path):
     assert stream == batch
 
 
-def test_customer_scd1_second_batch(spark, tmp_path_factory):
+def test_customer_scd1_second_batch(spark, tmp_path_factory, bikes_source):
     """A changed customer attribute propagates through the SCD1 merge
     and into the rebuilt dimension — the reference's 'update' branch
     intent (E:74-121) end to end."""
@@ -46,17 +46,19 @@ def test_customer_scd1_second_batch(spark, tmp_path_factory):
 
     from bikes_data_warehouse_etl_spark.plans.bikes_pipeline import BikesPipeline
 
-    SOURCE = "/root/reference/SourceData"
     whdir = str(tmp_path_factory.mktemp("bikes_wh_scd1b2"))
-    p = BikesPipeline(spark, SOURCE, whdir, "2022-01-15", "2022-01-15 18:00:00")
+    p = BikesPipeline(spark, bikes_source, whdir, "2022-01-15", "2022-01-15 18:00:00")
     p.run()
+    first_name_1 = (
+        p.read("ods", "customer").filter(F.col("customer_id") == 1).first()["first_name"]
+    )
 
     src2 = str(tmp_path_factory.mktemp("batch2"))
-    for f in os.listdir(SOURCE):
-        shutil.copy(os.path.join(SOURCE, f), src2)
+    for f in os.listdir(bikes_source):
+        shutil.copy(os.path.join(bikes_source, f), src2)
     rows = list(csv.reader(open(os.path.join(src2, "Customer.csv"))))
     for r in rows[1:]:
-        if r[0] == "3":  # Arlin Dearle* → new gender value
+        if r[0] == "3":  # customer 3 → new gender value
             r[3] = "Unknown"
     with open(os.path.join(src2, "Customer.csv"), "w", newline="") as fh:
         csv.writer(fh).writerows(rows)
@@ -70,4 +72,4 @@ def test_customer_scd1_second_batch(spark, tmp_path_factory):
     dim = p2.read("dw", "cust_dim")
     assert dim.filter(F.col("Cust_ID") == 3).first()["Cust_Gndr"] == "Unknown"
     # untouched row unchanged
-    assert cust.filter(F.col("customer_id") == 1).first()["first_name"] == "Laraine"
+    assert cust.filter(F.col("customer_id") == 1).first()["first_name"] == first_name_1
