@@ -9,9 +9,11 @@ Orchestrates the two reference entry points as one engine:
   refresh or anti-join-incremental per table.
 
 Storage is plain parquet under ``warehouse_dir/{ods,dw}/<table>``.
-Updates use a crash-consistent manifest-pointer commit
-(``sources/snapshot.py``): the merge is computed from the old state,
-written to a fresh immutable snapshot dir, and the table path — a
+Every write of all 17 tables — full refreshes, SCD merges and the two
+facts' anti-join appends — goes through one crash-consistent
+manifest-pointer commit (``sources/snapshot.table_write``): the new
+state is written to a fresh immutable snapshot dir (an append starts
+as hard links to the live snapshot's files), and the table path — a
 symlink — is atomically retargeted, so a crash at ANY step leaves a
 complete readable snapshot (fault-injection-tested in
 tests/test_snapshot_swap.py). On a cluster/object store you would swap
@@ -71,7 +73,13 @@ class BikesPipeline:
         return os.path.isdir(self._path(layer, table))
 
     def read(self, layer: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(layer, table))
+        """The table's committed state. Repairs first: after a crash
+        between a commit's manifest write and its symlink flip, the
+        symlink still names the previous snapshot, and an append or
+        merge computed from it would apply the committed day twice."""
+        path = self._path(layer, table)
+        snapshot.repair_table(path)
+        return self.spark.read.parquet(path)
 
     def _replace_dir(
         self,
@@ -87,9 +95,8 @@ class BikesPipeline:
         reading — and readers must never observe a missing or partial
         table. Local-FS stand-in for a transactional table format.
         """
-        staged = snapshot.next_snapshot_path(path)
-        write_partitioned(df, staged, partition_cols)
-        snapshot.commit_snapshot(path, staged)
+        with snapshot.table_write(path) as staged:
+            write_partitioned(df, staged, partition_cols)
 
     def _write(
         self,
@@ -100,14 +107,19 @@ class BikesPipeline:
         partition_cols: list[str] | None = None,
     ) -> None:
         path = self._path(layer, table)
-        if mode in ("replace", "overwrite"):
+        if mode == "append":
+            # the incremental facts: the staged snapshot starts as hard
+            # links to the live one's files and Spark appends the new
+            # rows beside them, so an append commits through the same
+            # manifest flip as a full refresh and never writes in place
+            with snapshot.table_write(path, append=True) as staged:
+                write_partitioned(df, staged, partition_cols, "append")
+        else:
             # overwrite goes through the snapshot commit too: Spark's
             # native overwrite deletes the live path before writing,
             # which would expose concurrent readers to a missing table
             # for the whole write duration.
             self._replace_dir(df, path, partition_cols)
-        else:
-            write_partitioned(df, path, partition_cols, mode)
 
     # ---------------- ODS load (entry point 1) ----------------
     def load_ods(self) -> None:

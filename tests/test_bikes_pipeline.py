@@ -31,6 +31,27 @@ def wh(spark, tmp_path_factory, bikes_source):
     return p
 
 
+def test_every_table_is_a_committed_snapshot(wh):
+    """Day 1 commits all 17 tables, the two incremental facts included,
+    through the snapshot protocol: each table path is a symlink to the
+    snapshot its ``__CURRENT`` manifest names."""
+    from bikes_data_warehouse_etl_spark.sources import snapshot
+
+    tables = {
+        "ods": ["customer", "address", "businesspartner", "productcategory",
+                "productdetail", "store", "salesorder", "salesorderitems",
+                "product", "datetab"],
+        "dw": ["prdct_sm_fct", "ordr_sm_fct", "ordr_dtl_fct", "cust_dim",
+               "str_dim", "prdct_dim", "act_perd_dim"],
+    }
+    for layer, names in tables.items():
+        for t in names:
+            path = wh._path(layer, t)
+            assert os.path.islink(path), f"{layer}/{t} is not a snapshot symlink"
+            assert os.path.isfile(path + "__CURRENT"), f"{layer}/{t} has no manifest"
+            assert os.readlink(path) == snapshot.read_manifest(path)
+
+
 def test_ods_row_counts(wh):
     # customer: 71 raw rows, one duplicate id visible only after
     # projection (customer_id 10) → 70 (§1.5.8)

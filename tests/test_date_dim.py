@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pyspark.sql.functions as F
-
 from bikes_data_warehouse_etl_spark.plans.date_dim import (
     build_act_perd_dim,
     build_date_dim,

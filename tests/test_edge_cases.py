@@ -3,8 +3,6 @@ dedup inputs."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from bikes_data_warehouse_etl_spark.operators.dedup import minhash_mins
 from bikes_data_warehouse_etl_spark.operators.merge import scd1_merge, scd2_merge
 

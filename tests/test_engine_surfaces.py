@@ -13,9 +13,10 @@ code: the package itself, ``tools/``, ``perfbench/``, ``bench.py`` and
   Only the queries registered with the registry's ``@_q`` decorator
   are skipped, because the registry is their caller;
 * every name a package module (other than an ``__init__``) imports is
-  used in that module or listed in its ``__all__``. An import inside a
-  ``try`` whose handler catches ``ImportError`` is an availability
-  probe and counts as used.
+  used in that module or listed in its ``__all__``; so is every name
+  that a file of ``tests/``, ``tools/`` or ``perfbench/``, ``bench.py``
+  or ``__spark_entry__.py`` imports. An import inside a ``try`` whose handler
+  catches ``ImportError`` is an availability probe and counts as used.
 
 A surface that only its own tests call fails here; delete it with its
 tests, or give it a real caller.
@@ -46,10 +47,6 @@ KEEP_DEFS = {
     "constraint as a check",
     f"{PKG}.operators.quality.check_report": "the reference's NOT NULL / PK "
     "constraints as one report",
-    f"{PKG}.sources.snapshot.repair_table": "the manual crash-recovery entry "
-    "point; every commit runs the same _repair_locked",
-    f"{PKG}.sources.snapshot.resolve_for_read": "the snapshot-isolated read "
-    "pin that the module's contract documents",
     f"{PKG}.operators.dedup.lsh_dropped_buckets": "the checked recall "
     "precondition of lsh_candidates_fast's oracle equality",
 }
@@ -230,5 +227,15 @@ def test_package_modules_use_what_they_import():
         for mod, path in _package_modules().items()
         if path.name != "__init__.py"
         for name in _unused_imports(path)
+    }
+    assert sorted(unused) == []
+
+
+def test_tests_tools_and_benchmarks_use_what_they_import():
+    files = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    for d in ("tests", "tools", "perfbench"):
+        files += sorted((REPO / d).rglob("*.py"))
+    unused = {
+        f"{f.relative_to(REPO)}:{name}" for f in files for name in _unused_imports(f)
     }
     assert sorted(unused) == []

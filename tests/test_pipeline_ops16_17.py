@@ -197,7 +197,6 @@ def test_pair_packing_guard_raises_on_domain_overflow(spark):
     query loudly (assert_true) instead of silently merging distinct
     pairs — the ADVICE r6 domain-growth trap."""
     import pytest
-    from pyspark.sql.utils import PythonException
 
     from bikes_data_warehouse_etl_spark.functions import packing
 

@@ -9,7 +9,6 @@ the embargo band's strict temporal ordering."""
 from __future__ import annotations
 
 import pandas as pd
-import pyspark.sql.functions as F
 
 from bikes_data_warehouse_etl_spark.plans import QUERIES
 from bikes_data_warehouse_etl_spark.plans.pipeline_ops26 import (

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime
 
-import numpy as np
 import pandas as pd
 
 from bikes_data_warehouse_etl_spark.plans import QUERIES

@@ -9,9 +9,10 @@ import pytest
 from bikes_data_warehouse_etl_spark.plans import QUERIES
 from bikes_data_warehouse_etl_spark.sources.parquet import TABLES
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 from verify_oracle import canonical_hash  # noqa: E402
 
 

@@ -8,7 +8,11 @@ CI, not review)."""
 
 from __future__ import annotations
 
+import os
+
 from bikes_data_warehouse_etl_spark.plans import QUERIES
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 # rounds 1-2 queries that carry their scale argument in prose without
@@ -82,7 +86,7 @@ def test_canonical_hash_dtype_robust():
 
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from verify_oracle import canonical_hash
 
     base = pd.DataFrame({"k": [1, 2, 3], "v": pd.array([10, 20, 30], dtype="int64")})
@@ -115,7 +119,7 @@ def test_canonical_hash_big_null_ints_never_collapse():
 
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from verify_oracle import canonical_hash
 
     a = (1 << 62) + 1
@@ -142,7 +146,7 @@ def test_dist_hash_fold_matches_across_engines(spark, tmp_path):
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from verify_oracle import dist_hash_exprs
 
     rows = [
@@ -200,7 +204,7 @@ def test_dist_hash_tier_agrees_on_real_query(spark, sf_dir):
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import __spark_entry__ as e
     from verify_oracle import dist_hash_exprs
 
@@ -229,7 +233,7 @@ def test_dist_hash_refuses_unproven_dtypes(spark):
     the raw text cast (_DIST_HASH_DTYPES)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from verify_oracle import _DIST_HASH_DTYPES, _DIST_HASH_FIXEDPOINT
 
     df = spark.createDataFrame(
@@ -261,7 +265,7 @@ def test_dist_hash_float_fixed_point_matches_across_engines(
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from verify_oracle import dist_hash_exprs
 
     vals = [
@@ -343,7 +347,7 @@ def test_canonical_hash_coerce_cannot_false_pass(monkeypatch):
 
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from verify_oracle import canonical_hash
 
     n = 1200  # beyond the 1000-row classifier sample
@@ -374,7 +378,7 @@ def test_dist_hash_without_oracle_fails_loudly(spark, monkeypatch, capsys):
     multi-hundred-million-row result). It must FAIL loudly instead."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import __spark_entry__ as e
     import verify_oracle as vo
 

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from bikes_data_warehouse_etl_spark.operators.multimodal import (
     decode_media,
     documents_as_media,

@@ -18,6 +18,9 @@ import pytest
 
 from bikes_data_warehouse_etl_spark.sources import snapshot
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
+
 
 class Crash(RuntimeError):
     pass
@@ -41,7 +44,9 @@ def _arm(monkeypatch, op_name: str, fail_on_call: int):
 
 
 def _write_snapshot(spark, path, values):
-    staged = snapshot.next_snapshot_path(path)
+    """Stage a snapshot outside ``table_write``, so a test can commit it
+    (or crash its commit) as a separate step."""
+    staged = snapshot._next_snapshot_path(path)
     spark.createDataFrame(
         [(int(v),) for v in values], "v long"
     ).coalesce(1).write.mode("overwrite").parquet(staged)
@@ -58,7 +63,7 @@ def test_commit_roundtrip_and_gc(spark, tmp_path):
     assert os.path.islink(path)
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [3]))
     assert _read_vals(spark, path) == [3]
-    # grace-period GC: live + previous retained (default retain=2)
+    # grace-period GC: live + previous retained
     assert len(snapshot.list_snapshots(path)) == 2
     # a third commit rolls the window: the [1,2] snapshot is GC'd
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [4]))
@@ -73,17 +78,6 @@ def test_commit_roundtrip_and_gc(spark, tmp_path):
     assert _read_vals(spark, path) == [4]
 
 
-def test_eager_gc_with_retain_1(spark, tmp_path, monkeypatch):
-    """retain=1 restores the round-7 eager-GC behavior (single-reader
-    deployments) — exactly one snapshot after every commit."""
-    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT_RETAIN", "1")
-    path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [2]))
-    assert len(snapshot.list_snapshots(path)) == 1
-    assert _read_vals(spark, path) == [2]
-
-
 def test_reader_grace_across_commit(spark, tmp_path):
     """The round-7 judge finding: a reader that resolved the symlink
     just before a commit must still complete its scan. With the
@@ -95,7 +89,7 @@ def test_reader_grace_across_commit(spark, tmp_path):
 
     # reader pins the snapshot (what a lazy multi-stage scan does
     # implicitly when it resolves the symlink at plan time)...
-    pinned = snapshot.resolve_for_read(path)
+    pinned = snapshot.current_snapshot(path)
     reader = spark.read.parquet(pinned)
 
     # ...a commit lands mid-scan...
@@ -148,7 +142,7 @@ def test_second_legacy_migration_converges(spark, tmp_path):
     retained = {
         tuple(_read_vals(spark, s)) for s in snapshot.list_snapshots(path)
     }
-    assert (7,) in retained
+    assert (7,) in retained and (6,) in retained
 
 
 @pytest.mark.parametrize("op", OPS)
@@ -185,16 +179,118 @@ def test_crash_at_every_step_leaves_readable_table(
             path, _write_snapshot(spark, path, [7, 8, 9])
         )
     assert _read_vals(spark, path) == [7, 8, 9]
-    # grace-period GC keeps at most the retention window (live + 1
-    # previous by default) plus crashed-writer staging whose
-    # reservation marker is still fresh (GC-proof until the TTL —
-    # indistinguishable from a live concurrent writer); expiring the
-    # TTL and repairing bounds the set again
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "0")
+    # repair alone bounds the set to the retention window (live + 1
+    # previous): a crashed writer's staging is dead once no writer
+    # holds the table lock
     snapshot.repair_table(path)
     assert len(snapshot.list_snapshots(path)) <= 2
     live = snapshot.current_snapshot(path)
     assert live is not None and os.path.basename(live) == snapshot.read_manifest(path)
+
+
+def _append(spark, path, rows):
+    """Append ``(v, d)`` rows, partitioned by ``d``, the way the pipeline
+    appends a fact: staged hard links plus a Spark append."""
+    from bikes_data_warehouse_etl_spark.sources.sinks import write_partitioned
+
+    df = spark.createDataFrame(rows, "v long, d string")
+    with snapshot.table_write(path, append=True) as staged:
+        write_partitioned(df, staged, ["d"], "append")
+
+
+def _read_rows(spark, path):
+    return sorted((r["v"], r["d"]) for r in spark.read.parquet(path).collect())
+
+
+@pytest.mark.parametrize("op", OPS)
+@pytest.mark.parametrize("nth", [1, 2])
+def test_append_crash_at_every_step_reads_old_or_old_plus_new(
+    spark, tmp_path, monkeypatch, op, nth
+):
+    """Kill an appending commit at each physical FS step (1st and 2nd
+    call of each op class): the partitioned table reads exactly the old
+    rows or the old plus the new ones, and repair plus a re-run of the
+    anti-join append converge to old plus new."""
+    path = str(tmp_path / f"f_{op}_{nth}")
+    _append(spark, path, [(1, "a"), (2, "b")])
+    _append(spark, path, [(3, "b")])  # two snapshots: GC has work to do
+    old = _read_rows(spark, path)
+    new = [(4, "b"), (5, "c")]
+
+    _arm(monkeypatch, op, nth)
+    try:
+        _append(spark, path, new)
+        crashed = False
+    except Crash:
+        crashed = True
+    got = _read_rows(spark, path)
+    assert got in (old, sorted(old + new)), f"partial state after {op}#{nth}: {got}"
+
+    monkeypatch.undo()
+    snapshot.repair_table(path)
+    if crashed:
+        have = {v for v, _ in _read_rows(spark, path)}
+        _append(spark, path, [r for r in new if r[0] not in have])
+    assert _read_rows(spark, path) == sorted(old + new)
+    snapshot.repair_table(path)
+    assert len(snapshot.list_snapshots(path)) <= 2
+    live = snapshot.current_snapshot(path)
+    assert os.path.basename(live) == snapshot.read_manifest(path)
+
+
+def test_append_after_crashed_flip_links_committed_state(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the manifest write leaves the symlink on the
+    previous snapshot. The next append must link the manifest's
+    snapshot, the committed state, not the one the symlink lags on."""
+    path = str(tmp_path / "f")
+    _append(spark, path, [(1, "a")])
+    _arm(monkeypatch, "_fs_symlink", 1)
+    with pytest.raises(Crash):
+        _append(spark, path, [(2, "b")])
+    monkeypatch.undo()
+    assert _read_rows(spark, path) == [(1, "a")]  # symlink lags the manifest
+    _append(spark, path, [(3, "c")])
+    assert _read_rows(spark, path) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_append_links_previous_files_and_vacuum_keeps_rows(spark, tmp_path):
+    """An append snapshot shares the previous snapshot's data files by
+    hard link: the append leaves their bytes unchanged, the rewritten
+    _SUCCESS marker is never shared, and vacuuming the previous
+    snapshot drops only its links — the live table keeps every row."""
+    import hashlib
+
+    def digests(snap):
+        out = {}
+        for root, _dirs, files in os.walk(snap):
+            for fn in files:
+                full = os.path.join(root, fn)
+                with open(full, "rb") as f:
+                    out[os.path.relpath(full, snap)] = hashlib.sha256(f.read()).hexdigest()
+        return out
+
+    path = str(tmp_path / "f")
+    _append(spark, path, [(1, "a"), (2, "b")])
+    prev = snapshot.current_snapshot(path)
+    before = digests(prev)
+    _append(spark, path, [(3, "b"), (4, "c")])
+    live = snapshot.current_snapshot(path)
+    assert live != prev
+    assert digests(prev) == before  # the append changed no old byte
+
+    data = [f for f in before if f.endswith(".parquet")]
+    assert data
+    for rel in data:
+        assert os.path.samefile(os.path.join(prev, rel), os.path.join(live, rel))
+    assert not os.path.samefile(
+        os.path.join(prev, "_SUCCESS"), os.path.join(live, "_SUCCESS")
+    )
+
+    assert snapshot.vacuum(path, keep_last=1) == [prev]
+    assert not os.path.exists(prev)
+    assert _read_rows(spark, path) == [(1, "a"), (2, "b"), (3, "b"), (4, "c")]
 
 
 @pytest.mark.parametrize("op,nth", [("_fs_rename", 1), ("_fs_replace", 2)])
@@ -294,13 +390,75 @@ def test_pipeline_scd2_crash_mid_swap_keeps_old_state(
     assert a == b and len(a) == 43  # one new SCD2 version row
 
 
+def test_pipeline_fact_append_crash_keeps_day1_rows(
+    spark, tmp_path, monkeypatch
+):
+    """Crash the day-2 commit of the incremental ``ordr_sm_fct`` after
+    its manifest write, before the symlink flip: the fact still reads
+    its day-1 rows, and re-running day 2 equals an uncrashed run on
+    every warehouse table (the re-run must not append the day twice)."""
+    import shutil
+    from collections import Counter
+
+    from bikes_data_warehouse_etl_spark.plans.bikes_pipeline import BikesPipeline
+    from perfbench.bikes_source import (
+        AS_OF_DAY1, AS_OF_DAY2, RUN_TS_DAY1, RUN_TS_DAY2, BikesSource,
+        write_extract,
+    )
+
+    src = BikesSource(1, replicas=1)
+    day1, day2 = str(tmp_path / "day1"), str(tmp_path / "day2")
+    write_extract(src.day1_rows(), day1)
+    write_extract(src.day2_rows(), day2)
+    crashed_wh, clean_wh = str(tmp_path / "wh"), str(tmp_path / "wh_clean")
+    BikesPipeline(spark, day1, crashed_wh, AS_OF_DAY1, RUN_TS_DAY1).run()
+    shutil.copytree(crashed_wh, clean_wh, symlinks=True)
+    fact = os.path.join(crashed_wh, "dw", "ordr_sm_fct")
+
+    def rows(path):
+        return Counter(map(tuple, spark.read.parquet(path).collect()))
+
+    day1_rows = rows(fact)
+
+    real = snapshot._fs_symlink
+
+    def crash_fact_flip(target, tmp):
+        if target.startswith("ordr_sm_fct__snap-"):
+            raise Crash("ordr_sm_fct symlink flip")
+        return real(target, tmp)
+
+    p2 = BikesPipeline(spark, day2, crashed_wh, AS_OF_DAY2, RUN_TS_DAY2)
+    monkeypatch.setattr(snapshot, "_fs_symlink", crash_fact_flip)
+    with pytest.raises(Crash):
+        p2.run()
+    monkeypatch.undo()
+    assert snapshot.read_manifest(fact) != os.readlink(fact)  # crashed mid-commit
+    assert rows(fact) == day1_rows
+
+    p2.run()
+    BikesPipeline(spark, day2, clean_wh, AS_OF_DAY2, RUN_TS_DAY2).run()
+    tables = [
+        os.path.join(layer, t)
+        for layer in ("ods", "dw")
+        for t in os.listdir(os.path.join(clean_wh, layer))
+        if "__" not in t
+    ]
+    assert len(tables) == 17
+    for t in tables:
+        got, want = (
+            rows(os.path.join(w, t)) for w in (crashed_wh, clean_wh)
+        )
+        assert got == want, f"{t} differs after the re-run"
+    assert sum(rows(fact).values()) > sum(day1_rows.values())  # day 2 added rows
+
+
 def test_vacuum_tool_reclaims_warehouse(spark, tmp_path):
     """tools/vacuum.py end-to-end: discovers snapshot tables by their
     manifests, vacuums beyond keep_last, removes orphan scratch dirs
     only with drop_orphans — and the live tables stay readable."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import vacuum as vac
 
     root = str(tmp_path / "wh")
@@ -336,18 +494,13 @@ def test_grace_window_protects_previous_live_not_orphans(
     """After a crashed commit leaves an UNCOMMITTED staged orphan with
     a higher id than the live snapshot, the next successful commit's
     grace window must keep the previous LIVE snapshot (what in-flight
-    readers hold) and GC the orphan — not the other way round. The
-    orphan's reservation marker is expired first (TTL=0): a FRESH
-    marker now means a live concurrent writer and is deliberately
-    protected (see test_concurrent_staging_survives_other_writers_gc)."""
+    readers hold) and GC the orphan — not the other way round."""
     path = str(tmp_path / "t")
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1, 2]))
     prev_live = snapshot.current_snapshot(path)
 
-    # a staged snapshot that never commits (crash before manifest);
-    # its writer is long dead — the reservation TTL has expired
+    # a staged snapshot that never commits (crash before manifest)
     orphan = _write_snapshot(spark, path, [7])
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "0")
 
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [8]))
     assert _read_vals(spark, path) == [8]
@@ -399,7 +552,7 @@ def test_vacuum_tool_never_touches_pattern_named_snapshot_tables(
     scratch — neither its live snapshot dirs nor the table itself."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import vacuum as vac
 
     root = str(tmp_path / "wh")
@@ -425,7 +578,7 @@ def test_vacuum_tool_dry_run_respects_older_than(spark, tmp_path):
     snapshot.commit_snapshot(t, _write_snapshot(spark, t, [2]))
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import vacuum as vac
 
     # fresh snapshots + a 1h grace: dry run must report NOTHING (it
@@ -437,80 +590,81 @@ def test_vacuum_tool_dry_run_respects_older_than(spark, tmp_path):
     assert len(snapshot.list_snapshots(t)) == 2  # dry run touched nothing
 
 
-def test_concurrent_staging_survives_other_writers_gc(spark, tmp_path):
-    """Advisor round-8 HIGH finding: writer A reserves snap-N and is
-    still staging (a big Spark write takes minutes) while writer B
-    reserves snap-N+1 and commits FIRST. B's commit-time GC sees
-    N <= new live id N+1 and, before the fix, rmtree'd A's dir
-    mid-write; A's commit then pointed the manifest at a deleted dir.
-    The reservation marker makes A's staging GC-proof until A commits
-    (or the marker's TTL expires)."""
+def _staging_writer(args):
+    """Worker: write ``value`` to ``path`` through ``table_write``. With
+    ``release`` set it keeps the block open (so keeps the table lock)
+    until that file exists. Appends its steps to the shared ``log``."""
+    import sys
+    import time as _t
+
+    sys.path.insert(0, REPO)
+    from bikes_data_warehouse_etl_spark.sources import snapshot as snap
+
+    path, value, log, release = args
+
+    def note(event):
+        with open(log, "a") as f:
+            f.write(f"{value}:{event}\n")
+
+    with snap.table_write(path) as staged:
+        note(f"staged {os.path.basename(staged)}")
+        with open(os.path.join(staged, "data.txt"), "w") as f:
+            f.write(value)
+        while release and not os.path.exists(release):
+            _t.sleep(0.01)
+        note("committing")
+    return value, snap.__file__
+
+
+def test_concurrent_staging_survives_other_writers_gc(tmp_path):
+    """Two writers in two processes on one table. Writer A stages and
+    is still writing when writer B starts. B's staged write blocks on
+    the table lock until A has committed, so B's commit GC can never
+    reclaim A's dir mid-write (A's commit raises if its dir is gone).
+    B stages above A's id and, committing last, wins."""
+    import multiprocessing as mp
+    import time as _t
+
     path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
+    log, release = str(tmp_path / "log"), str(tmp_path / "release")
 
-    # writer A reserves and "is still staging" (nothing written yet —
-    # the worst case: an empty reserved dir looks maximally orphan-like)
-    staged_a = snapshot.next_snapshot_path(path)
-    assert os.path.isfile(staged_a + "__rsv")
+    def events():
+        if not os.path.exists(log):
+            return []
+        with open(log) as f:
+            return f.read().splitlines()
 
-    # writer B reserves a HIGHER id, commits, and GC runs twice more
-    # (two full commits roll the retention window past A's id)
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [2]))
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [3]))
-    assert _read_vals(spark, path) == [3]
-    assert os.path.isdir(staged_a), "in-flight staging was GC'd"
+    with mp.get_context("spawn").Pool(2) as pool:
+        a = pool.apply_async(_staging_writer, ((path, "A", log, release),))
+        deadline = _t.time() + 120
+        while not events() and _t.time() < deadline:
+            _t.sleep(0.05)
+        assert events() == ["A:staged t__snap-1"]
+        b = pool.apply_async(_staging_writer, ((path, "B", log, None),))
+        _t.sleep(2.0)  # B is running, and must be waiting on A's lock
+        assert events() == ["A:staged t__snap-1"]
+        open(release, "w").close()
+        assert a.get(timeout=120) == ("A", snapshot.__file__)
+        assert b.get(timeout=120) == ("B", snapshot.__file__)
 
-    # vacuum (the other GC path with the same hole) must also spare it
-    snapshot.vacuum(path, keep_last=1)
-    assert os.path.isdir(staged_a), "vacuum reclaimed in-flight staging"
-
-    # A finishes staging and commits — the table serves A's data and
-    # the marker is gone
-    spark.createDataFrame([(7,)], "v long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staged_a)
-    snapshot.commit_snapshot(path, staged_a)
-    assert _read_vals(spark, path) == [7]
-    assert not os.path.exists(staged_a + "__rsv")
+    assert events() == ["A:staged t__snap-1", "A:committing", "B:staged t__snap-2", "B:committing"]
+    live = snapshot.current_snapshot(path)
+    assert os.path.basename(live) == snapshot.read_manifest(path) == "t__snap-2"
+    with open(os.path.join(live, "data.txt")) as f:
+        assert f.read() == "B"  # last committer wins
 
 
-def test_stale_reservation_is_reclaimed(spark, tmp_path, monkeypatch):
-    """A reservation whose writer died (marker older than the TTL) is
-    an orphan again: the next commit's GC reclaims dir AND marker."""
+def test_stale_reservation_is_reclaimed(spark, tmp_path):
+    """A snapshot id reserved by a writer that died before its commit
+    is dead: no writer holds the table lock, so the next commits' GC
+    reclaims the dir."""
     path = str(tmp_path / "t")
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
     dead = _write_snapshot(spark, path, [9])  # staged, never commits
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "0")
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [2]))
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [3]))
     assert not os.path.isdir(dead)
-    assert not os.path.exists(dead + "__rsv")
     assert _read_vals(spark, path) == [3]
-
-
-def test_vacuum_dry_run_never_touches_markers(spark, tmp_path, monkeypatch):
-    """dry_run must be PURE even for stale reservations: the marker
-    predicate runs inside the dry-run selection and must not delete
-    the stale marker as a side effect (self-review r9)."""
-    path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
-    dead = _write_snapshot(spark, path, [9])  # staged, never commits
-    # two commits advance the live id PAST the dead reservation (the
-    # id-above-manifest guard no longer protects it); the fresh marker
-    # carries it through both commit GCs
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [2]))
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [3]))
-    assert os.path.isdir(dead)
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "0")  # stale now
-
-    would = snapshot.vacuum(path, keep_last=1, dry_run=True)
-    assert dead in would  # stale reservation IS reclaimable...
-    assert os.path.isdir(dead)  # ...but dry run touched nothing
-    assert os.path.isfile(dead + "__rsv")
-
-    removed = snapshot.vacuum(path, keep_last=1)
-    assert dead in removed
-    assert not os.path.exists(dead + "__rsv")
 
 
 def test_commit_refuses_missing_staged_dir(spark, tmp_path):
@@ -539,7 +693,7 @@ def test_min_age_floor_protects_rapid_commit_span(
     path = str(tmp_path / "t")
     snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
 
-    pinned = snapshot.resolve_for_read(path)  # reader plans its scan
+    pinned = snapshot.current_snapshot(path)  # reader plans its scan
     reader = spark.read.parquet(pinned)
 
     # two MORE commits land before the scan finishes — count-retention
@@ -612,16 +766,15 @@ def _hammer_commits(args):
     """Worker: N commits of plain-file snapshots to one shared table."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from bikes_data_warehouse_etl_spark.sources import snapshot as snap
 
     path, wid, n = args
     for i in range(n):
-        staged = snap.next_snapshot_path(path)
-        with open(os.path.join(staged, "data.txt"), "w") as f:
-            f.write(f"{wid}:{i}")
-        snap.commit_snapshot(path, staged)
-    return wid
+        with snap.table_write(path) as staged:
+            with open(os.path.join(staged, "data.txt"), "w") as f:
+                f.write(f"{wid}:{i}")
+    return wid, snap.__file__
 
 
 def _hammer_vacuum(args):
@@ -630,24 +783,25 @@ def _hammer_vacuum(args):
     import sys
     import time as _t
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from bikes_data_warehouse_etl_spark.sources import snapshot as snap
 
     path, n = args
     for _ in range(n):
         snap.vacuum(path, keep_last=1, older_than=0)
         _t.sleep(0.01)
-    return "vac"
+    return "vac", snap.__file__
 
 
 def test_vacuum_racing_commits_never_breaks_writers(tmp_path):
     """The advisor-r8 race, vacuum flavor: an aggressive vacuum loop
     (keep_last=1, older_than=0 — maximum reclamation pressure) racing
     three committing writers must never reclaim anyone's in-flight
-    staging (reservation markers) nor leave the table dangling: every
-    commit succeeds (commit now RAISES on a missing staged dir, so a
+    staging (it waits on the table lock) nor leave the table dangling:
+    every commit succeeds (commit RAISES on a missing staged dir, so a
     reclaimed staging would fail the worker, not corrupt the table),
-    and the final state is one writer's last complete commit."""
+    and the final state is one writer's last complete commit. Every
+    worker runs the module under test, not another checkout's."""
     import multiprocessing as mp
 
     path = str(tmp_path / "t")
@@ -657,8 +811,9 @@ def test_vacuum_racing_commits_never_breaks_writers(tmp_path):
             _hammer_commits, [(path, w, 5) for w in range(3)]
         )
         vac = pool.apply_async(_hammer_vacuum, ((path, 30),))
-        assert sorted(committers.get(timeout=300)) == [0, 1, 2]
-        assert vac.get(timeout=300) == "vac"
+        mod = snapshot.__file__
+        assert sorted(committers.get(timeout=300)) == [(w, mod) for w in range(3)]
+        assert vac.get(timeout=300) == ("vac", mod)
 
     from bikes_data_warehouse_etl_spark.sources import snapshot as snap
 
@@ -672,8 +827,8 @@ def test_vacuum_racing_commits_never_breaks_writers(tmp_path):
 
 def test_concurrent_writers_serialize_and_converge(tmp_path):
     """Writer-lock proof: four processes racing 6 commits each onto ONE
-    table must interleave safely — every commit's staging gets a unique
-    id (reservation under the lock), the final state is exactly one
+    table must interleave safely — one writer holds the table at a
+    time, so every staging gets a unique id, the final state is exactly one
     writer's last commit (last-committer-wins), the symlink agrees with
     the manifest, and retention stays bounded. Pure-FS snapshots (the
     module is format-agnostic), so no Spark needed per process."""
@@ -682,7 +837,7 @@ def test_concurrent_writers_serialize_and_converge(tmp_path):
     path = str(tmp_path / "t")
     with mp.get_context("spawn").Pool(4) as pool:
         done = pool.map(_hammer_commits, [(path, w, 6) for w in range(4)])
-    assert sorted(done) == [0, 1, 2, 3]
+    assert sorted(done) == [(w, snapshot.__file__) for w in range(4)]
 
     from bikes_data_warehouse_etl_spark.sources import snapshot as snap
 
@@ -692,106 +847,15 @@ def test_concurrent_writers_serialize_and_converge(tmp_path):
     with open(os.path.join(live, "data.txt")) as f:
         wid, i = f.read().split(":")
     assert int(i) == 5  # someone's LAST commit won, never a partial state
-    # 24 commits happened; retention + in-flight protection keep the
-    # on-disk set small and every retained dir is a complete snapshot
+    # 24 commits happened; retention keeps live + previous, and every
+    # retained dir is a complete snapshot
     snaps = snap.list_snapshots(path)
-    assert len(snaps) <= 4
+    assert len(snaps) <= 2
     for s in snaps:
         assert os.path.isfile(os.path.join(s, "data.txt")) or s != live
     # a final vacuum converges to exactly the live snapshot
     snap.vacuum(path, keep_last=1)
     assert snap.list_snapshots(path) == [live]
-
-
-def test_heartbeat_keeps_long_staging_protected(
-    spark, tmp_path, monkeypatch
-):
-    """Judge r9 residual #3: a staged write that outlives the
-    reservation TTL loses its marker's freshness mid-write and a
-    concurrent writer's commit GC may rmtree it. A heartbeat touch
-    restores protection; with the heartbeat silent the stale marker is
-    reclaimed as before (crashed-writer semantics unchanged)."""
-    path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
-    staging = _write_snapshot(spark, path, [9])  # long-running writer A
-    # two commits advance the manifest PAST writer A's id, so only the
-    # marker protects it — then age the marker beyond the TTL
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [2]))
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [3]))
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "60")
-    old = os.path.getmtime(staging + "__rsv") - 3600
-    os.utime(staging + "__rsv", (old, old))
-    assert not snapshot._is_reserved(staging)
-
-    snapshot.heartbeat_reservation(staging)  # writer A is still alive
-    assert snapshot._is_reserved(staging)
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [4]))
-    assert os.path.isdir(staging)  # survived a concurrent commit GC
-
-    # writer A crashes (no more heartbeats): stale → reclaimed
-    os.utime(staging + "__rsv", (old, old))
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [5]))
-    assert not os.path.isdir(staging)
-    assert not os.path.exists(staging + "__rsv")
-
-
-def test_reservation_heartbeat_context_manager(
-    spark, tmp_path, monkeypatch
-):
-    """The context-manager form keeps the marker fresh for a write
-    that runs LONGER than the TTL, across a racing commit; after exit
-    the marker ages normally (a crashed writer is still reclaimed)."""
-    import time as _time
-
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "0.4")
-    path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
-    staging = snapshot.next_snapshot_path(path)
-    with snapshot.reservation_heartbeat(staging, interval=0.05):
-        _time.sleep(0.5)  # already past the raw TTL
-        assert snapshot._is_reserved(staging)  # heartbeat kept it fresh
-        snapshot.commit_snapshot(path, _write_snapshot(spark, path, [2]))
-        _time.sleep(0.5)
-        assert os.path.isdir(staging)  # survived the mid-write commit GC
-        spark.createDataFrame([(9,)], "v long").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-    # the slow write finishes and commits normally
-    snapshot.commit_snapshot(path, staging)
-    assert _read_vals(spark, path) == [9]
-    assert not os.path.exists(staging + "__rsv")
-
-
-def test_heartbeat_redrops_vanished_marker(spark, tmp_path):
-    """A stale-GC pass can drop the marker while its writer is in fact
-    alive: the next heartbeat re-drops it (dir still exists). For a
-    reclaimed dir the heartbeat must NOT resurrect a marker."""
-    path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
-    staging = snapshot.next_snapshot_path(path)
-    os.remove(staging + "__rsv")
-    snapshot.heartbeat_reservation(staging)
-    assert os.path.isfile(staging + "__rsv")
-
-    gone = f"{path}__snap-99"  # never created
-    snapshot.heartbeat_reservation(gone)
-    assert not os.path.exists(gone + "__rsv")
-
-
-def test_repair_clears_marker_left_on_committed_snapshot(spark, tmp_path):
-    """Advisor r9: a crash between the manifest rename and commit's
-    _clear_reservation leaves a marker protecting an ALREADY-COMMITTED
-    snapshot for the full TTL (compounding with the min-age floor).
-    repair_table clears it — the manifest naming the snapshot proves
-    the staging reservation has done its job."""
-    path = str(tmp_path / "t")
-    snapshot.commit_snapshot(path, _write_snapshot(spark, path, [1]))
-    live = snapshot.current_snapshot(path)
-    snapshot._reserve(live)  # simulate the crash-left marker
-    assert snapshot._is_reserved(live)
-    snapshot.repair_table(path)
-    assert not os.path.exists(live + "__rsv")
-    assert _read_vals(spark, path) == [1]  # repair touched nothing else
 
 
 def test_commit_min_age_override(spark, tmp_path, monkeypatch):

@@ -210,7 +210,7 @@ def test_scd1_stream_self_vacuum_bounds_snapshots(spark, tmp_path, monkeypatch):
     )
     # batch ids 0..11 → self-vacuum after batches 4, 8 and 12 (the
     # last); keep_last=1 + zero grace leaves exactly the live snapshot
-    # (commit-time GC alone would leave retain=2)
+    # (commit-time GC alone would leave live + previous)
     assert len(snapshot.list_snapshots(tgt)) == 1
     final = {r["k"]: r["v"] for r in spark.read.parquet(tgt).collect()}
     assert final == {i: f"v{i}" for i in range(n_batches)}

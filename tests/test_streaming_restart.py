@@ -111,9 +111,7 @@ def test_scd1_stream_restart_converges(spark, tmp_path, monkeypatch):
     assert got == want
     ks = [k for k, _v in got]
     assert len(ks) == len(set(ks)) == 3  # no duplicate keys
-    # the orphan staged snapshot is reservation-protected until its TTL
-    # (a crashed writer is indistinguishable from one still staging);
-    # once expired, a repair bounds the set to the retention window
-    monkeypatch.setenv("SPARK_GRAFT_RESERVATION_TTL", "0")
+    # the killed batch's staged snapshot is dead once its writer let go
+    # of the table lock: a repair bounds the set to the retention window
     snapshot.repair_table(tgt)
     assert len(snapshot.list_snapshots(tgt)) <= 2

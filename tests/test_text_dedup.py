@@ -181,8 +181,6 @@ def test_exact_dedup_shuffle_key_is_hash_not_text(spark):
     plan = exact_dedup(df)._jdf.queryExecution().executedPlan().toString()
     assert "content_hash" in plan
     # the exchange partitions on the hash, not the raw text column
-    import re
-
     ex = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
     assert ex and all("content_hash" in ln for ln in ex)
 

@@ -26,9 +26,9 @@ ROOT and only removed with ``--drop-orphans`` (mtime-gated by
 ``--older-than``). Prints ONE JSON summary line.
 
 No SparkSession needed — pure driver-side FS walk. Safe to run even
-while jobs are committing: snapshot.vacuum serializes on each table's
-writer lock and never reclaims in-flight staging (ids above the
-manifest's) or anything inside the grace window.
+while jobs are committing: snapshot.vacuum waits on each table's lock,
+which a writer holds from staging to commit, and never reclaims the
+live snapshot or anything inside the grace window.
 """
 
 from __future__ import annotations

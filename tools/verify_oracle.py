@@ -36,7 +36,7 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _null_int_col(s: pd.Series) -> pd.Series:
